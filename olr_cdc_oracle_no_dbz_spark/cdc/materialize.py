@@ -9,9 +9,11 @@ source columns widen the sink schema.
 Design for 100 TB:
 - LWW dedup is ONE hash-partition shuffle on the key (window row_number);
   with AQE skew-join/partition-coalescing on, a hot key splits at runtime.
-- merge_into_state unions state+delta and re-runs LWW — at scale this maps
-  1:1 onto a storage-side MERGE (Delta/Iceberg); the per-batch delta is
-  dedup'd first so the merge input is at most one row per key.
+- merge_into_state unions state+delta and runs LWW once over both — at
+  scale this maps 1:1 onto a storage-side MERGE (Delta/Iceberg). The delta
+  is not compacted first: the (scn, seq) order is total, so the winner of
+  state ∪ delta equals the winner of state ∪ LWW(delta), and max_by's
+  partial aggregation already collapses the delta's duplicates map-side.
 - The max-applied-SCN guard makes redelivery idempotent (reference relies
   on upsert idempotence the same way, README.md:788-790).
 """
@@ -158,11 +160,11 @@ def merge_into_state(
     """Incremental upsert+delete merge of a new changelog batch into state.
 
     Equivalent of the sink's per-batch ``INSERT ... ON CONFLICT DO UPDATE``
-    + ``DELETE`` (README.md:780-797). Steps:
-      1. LWW-compact the delta (≤1 row per key enters the merge).
-      2. Outer-combine with state; the delta row wins only if its
-         (scn, seq) exceeds the state row's — the redelivery/idempotence
-         guard (SURVEY.md §4 'SCN-monotonic apply order').
+    + ``DELETE`` (README.md:780-797): one LWW pass over state ∪ delta.
+    A delta row wins only if its (scn, seq) exceeds every other row of
+    its key, the state row included — the redelivery/idempotence guard
+    (SURVEY.md §4 'SCN-monotonic apply order'). The delta may hold
+    several rows per key.
 
     The returned *internal* state keeps tombstones (``__deleted=true``
     rows) and the (scn, seq) watermark columns: dropping a tombstone
@@ -171,11 +173,10 @@ def merge_into_state(
     this whole function becomes one ``MERGE INTO``; auto table creation
     (``auto.create: true``, README.md:786) is the ``state=None`` case.
     """
-    compacted = latest_state(delta, key_cols, order_cols)
     if state is None:
-        return compacted
-    state, compacted = _align_schemas(state, compacted)
-    return latest_state(state.unionByName(compacted), key_cols, order_cols)
+        return latest_state(delta, key_cols, order_cols)
+    state, delta = _align_schemas(state, delta)
+    return latest_state(state.unionByName(delta), key_cols, order_cols)
 
 
 def publish(

@@ -289,14 +289,14 @@ def write_batch(
             batch_size, paramstyle, parallelism,
         )
     data_cols = [c for c in batch_df.columns if c != "__deleted"]
-    live = [
-        tuple(r[c] for c in data_cols)
-        for r in batch_df.filter(~F.col("__deleted")).collect()
-    ]
-    dead = [
-        tuple(r[c] for c in key_cols)
-        for r in batch_df.filter(F.col("__deleted")).collect()
-    ]
+    # one collect (each action re-runs the batch's upstream plan); rows
+    # with a NULL flag are neither upserted nor deleted
+    live, dead = [], []
+    for r in batch_df.filter(F.col("__deleted").isNotNull()).collect():
+        if r["__deleted"]:
+            dead.append(tuple(r[c] for c in key_cols))
+        else:
+            live.append(tuple(r[c] for c in data_cols))
     conn = connection_factory()
     try:
         cur = conn.cursor()

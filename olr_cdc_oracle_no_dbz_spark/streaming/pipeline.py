@@ -10,6 +10,7 @@ backpressure).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -88,9 +89,17 @@ def materialize_stream(
                 batch_df.filter(F.col("_corrupt").isNull())
             ).drop("commit_scn")
             ev = filter_source(committed, owner, table)
-        delta = unwrap(ev, mode="rewrite")
-        if delta.isEmpty():
-            return
+        # decoded once: isEmpty, the touched-bucket collect, the merge
+        # and the mirror's compaction all read this one copy, so the
+        # feed is scanned (and counted in numInputRows) once per batch
+        delta = unwrap(ev, mode="rewrite").persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            if not delta.isEmpty():
+                _apply_delta(delta)
+        finally:
+            delta.unpersist()
+
+    def _apply_delta(delta) -> None:
         if schema_catalog is not None:
             # the subject is the sink table's ROW IMAGE (key + data
             # columns) — bookkeeping columns are engine-internal, not
@@ -189,8 +198,6 @@ def materialize_stream_tables(
     on their own subject timelines, exactly the Registry's
     subject-per-topic model.
     """
-    from pyspark import StorageLevel
-
     if (schema_catalog is None) != (subjects is None):
         raise ValueError("schema_catalog and subjects must be passed together")
 

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from olr_cdc_oracle_no_dbz_spark.checkpointing import truncate_lineage
 from olr_cdc_oracle_no_dbz_spark.cdc.materialize import (
     DEFAULT_ORDER,
-    latest_state,
     merge_into_state,
     publish,
 )
@@ -93,24 +92,16 @@ class ParquetStateTable:
     # -- merge ------------------------------------------------------------
 
     def merge_batch(self, delta: DataFrame) -> None:
-        """Apply one changelog batch: LWW-compact the delta, merge into
-        the touched buckets only, dynamically overwrite those buckets.
+        """Apply one changelog batch: merge it into the touched buckets
+        only (one LWW pass over those buckets ∪ the delta), dynamically
+        overwrite those buckets.
 
         Safe under redelivery: ``merge_into_state``'s (scn, seq) guard
         makes re-applying a batch a no-op, so ``foreachBatch`` retries
         after a crash are idempotent (ST3; reference relies on upsert
         idempotence the same way, README.md:788-790).
         """
-        compacted = latest_state(delta, self.key_cols, self.order_cols).withColumn(
-            _BUCKET, self._bucket_col()
-        )
-        if not self.exists():
-            merged = compacted
-        else:
-            # touched buckets come from the RAW delta keys (cheap partial-
-            # agg distinct), not from `compacted` — evaluating compacted
-            # here would run the LWW compaction twice per batch (once for
-            # this collect, again inside the merge plan)
+        if self.exists():
             touched = [
                 r[0]
                 for r in delta.select(self._bucket_col().alias(_BUCKET))
@@ -118,9 +109,17 @@ class ParquetStateTable:
                 .collect()
             ]
             state = self.read_internal(buckets=touched)
-            merged = merge_into_state(
-                state, compacted, self.key_cols, self.order_cols
-            ).withColumn(_BUCKET, self._bucket_col())
+            n_written = len(touched)
+        else:
+            state, n_written = None, self.n_buckets
+        merged = merge_into_state(
+            state, delta, self.key_cols, self.order_cols
+        ).withColumn(_BUCKET, self._bucket_col())
+        # One write task per core, each writing whole buckets: per-file
+        # cost dominates the write, so n_buckets tasks (or the single
+        # partition AQE coalesces a small merge shuffle into) is slower.
+        parts = max(1, min(self.spark.sparkContext.defaultParallelism, n_written))
+        merged = merged.repartition(parts, _BUCKET)
         # Materialize before overwriting the partitions we just read
         # (lazy plans must not scan files the write is replacing).
         # truncate_lineage: localCheckpoint by default, durable

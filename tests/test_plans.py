@@ -641,3 +641,89 @@ def test_registry_no_smj_against_cut_relation(spark, q):
         if n and name not in _SMJ_CUT_ALLOWED:
             violations[name] = n
     assert not violations, violations
+
+
+#: a Spark 4 ``executedPlan`` string (broadcast off, two cut relations)
+#: with exactly ONE SortMergeJoin-against-cut site: the first join's
+#: left side reaches ``Scan ExistingRDD`` through pass-through operators
+#: only; every other cut leaf sits below a HashAggregate.
+_SMJ_ONE_SITE_PLAN = """\
+AdaptiveSparkPlan isFinalPlan=false
++- Union
+   :- Project [id#0L]
+   :  +- SortMergeJoin [id#0L], [id#3L], Inner
+   :     :- Sort [id#0L ASC NULLS FIRST], false, 0
+   :     :  +- Exchange hashpartitioning(id#0L, 4), ENSURE_REQUIREMENTS, [plan_id=101]
+   :     :     +- Project [id#0L]
+   :     :        +- Scan ExistingRDD[id#0L,v#1L]
+   :     +- Sort [id#3L ASC NULLS FIRST], false, 0
+   :        +- HashAggregate(keys=[id#3L], functions=[], output=[id#3L])
+   :           +- Exchange hashpartitioning(id#3L, 4), ENSURE_REQUIREMENTS, [plan_id=97]
+   :              +- HashAggregate(keys=[id#3L], functions=[], output=[id#3L])
+   :                 +- Filter isnotnull(id#3L)
+   :                    +- Scan ExistingRDD[id#3L]
+   +- Project [id#12L]
+      +- SortMergeJoin [id#12L], [id#8L], Inner
+         :- Sort [id#12L ASC NULLS FIRST], false, 0
+         :  +- HashAggregate(keys=[id#12L], functions=[], output=[id#12L])
+         :     +- Exchange hashpartitioning(id#12L, 4), ENSURE_REQUIREMENTS, [plan_id=106]
+         :        +- HashAggregate(keys=[id#12L], functions=[], output=[id#12L])
+         :           +- Filter isnotnull(id#12L)
+         :              +- Scan ExistingRDD[id#12L]
+         +- Sort [id#8L ASC NULLS FIRST], false, 0
+            +- HashAggregate(keys=[id#8L], functions=[], output=[id#8L])
+               +- Exchange hashpartitioning(id#8L, 4), ENSURE_REQUIREMENTS, [plan_id=108]
+                  +- HashAggregate(keys=[id#8L], functions=[], output=[id#8L])
+                     +- Filter isnotnull(id#8L)
+                        +- Scan ExistingRDD[id#8L]
+"""
+
+
+def test_smj_vs_cut_parser_counts_known_fixture():
+    """The registry sweep above passes vacuously if the parser stops
+    finding sites; pin it on a plan with one known site. Dropping a
+    pass-through operator (Sort, Exchange, Project) loses the site,
+    and adding an aggregate to the set counts the second join too."""
+    assert _smj_vs_cut_sites(_SMJ_ONE_SITE_PLAN) == 1
+
+
+def test_state_merge_plan_one_lww_exchange_then_bucket_repartition(
+    spark, tmp_path, monkeypatch
+):
+    """``ParquetStateTable.merge_batch`` on an existing table: ONE LWW
+    aggregate (one Exchange on the key) over state ∪ raw delta, and the
+    merged rows repartitioned on ``bucket_id`` into min(cores, buckets
+    written) partitions right below the lineage cut, so the bucket
+    files are written by every core instead of one coalesced task."""
+    import re
+
+    from olr_cdc_oracle_no_dbz_spark.streaming import state as state_mod
+    from olr_cdc_oracle_no_dbz_spark.streaming.state import ParquetStateTable
+
+    cols = "id int, stock int, scn long, seq int, __deleted boolean"
+    table = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=8)
+    table.merge_batch(
+        spark.createDataFrame([(i, i, 1, 1, False) for i in range(40)], cols)
+    )
+    # several rows per key: the delta is NOT compacted before the merge
+    delta = spark.createDataFrame(
+        [(i % 12, i, 2 + i, 1, i % 5 == 0) for i in range(30)], cols
+    )
+    cut = []
+    real = state_mod.truncate_lineage
+
+    def capture(df, **kw):
+        cut.append(_plan(df))
+        return real(df, **kw)
+
+    monkeypatch.setattr(state_mod, "truncate_lineage", capture)
+    table.merge_batch(delta)
+    (plan,) = cut
+    assert len(re.findall(r"Exchange hashpartitioning\(id#", plan)) == 1, plan
+    touched = delta.select(table._bucket_col()).distinct().count()
+    parts = min(spark.sparkContext.defaultParallelism, touched)
+    root = plan.splitlines()[1]  # the node right below AdaptiveSparkPlan
+    assert re.search(
+        rf"Exchange hashpartitioning\(bucket_id#\d+, {parts}\), REPARTITION_BY_NUM",
+        root,
+    ), plan

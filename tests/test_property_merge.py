@@ -114,6 +114,32 @@ def test_lww_max_by_equals_window_row_number(spark, events):
     assert _final(latest_state(df)) == _final(via_window)
 
 
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(events=_events, cut=st.integers(1, 16), redeliver=st.integers(1, 4))
+def test_uncompacted_delta_merge_equals_compact_then_merge(
+    spark, events, cut, redeliver
+):
+    """merge_into_state runs ONE LWW pass over state ∪ raw delta; it
+    must equal compacting the delta first and then merging, for deltas
+    with several rows per key, in-delta duplicates, and an exact
+    (scn, seq) redelivery of rows the state already holds."""
+    from olr_cdc_oracle_no_dbz_spark.cdc.materialize import latest_state
+
+    rows = _rows(events)
+    cut = min(cut, len(rows))
+    applied, fresh = rows[:cut], rows[cut:]
+    state = merge_into_state(None, _df(spark, applied))
+    delta = _df(spark, fresh + fresh[:redeliver] + applied[-redeliver:])
+    compact_then_merge = latest_state(
+        state.unionByName(latest_state(delta))
+    )
+    assert _final(merge_into_state(state, delta)) == _final(compact_then_merge)
+
+
 # -- JDBC sink end-to-end against DuckDB ------------------------------------
 
 

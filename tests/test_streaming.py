@@ -170,6 +170,63 @@ def test_backpressure_max_files_per_trigger(spark, tmp_path):
     assert summary["batch_id"] is not None and summary["batch_id"] >= 2
 
 
+@pytest.mark.parametrize("mirror", [False, True], ids=["state", "state+jdbc"])
+def test_progress_counts_each_input_line_once(spark, tmp_path, mirror):
+    """ST7 progress is truthful: the micro-batch is decoded once, so the
+    summed ``numInputRows`` equals the lines fed — markers, a foreign
+    table's event and a corrupt line included — with or without the
+    JDBC mirror. Re-reading the source per action (emptiness check,
+    touched buckets, merge, mirror collect) would count each line
+    once per pass."""
+    import decimal
+    import sqlite3
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=4)
+    r1, r2 = product_row(1, "A", "1.00", 1), product_row(2, "B", "2.00", 2)
+    files = [
+        [
+            event(100, "begin", xid="x1"),
+            event(100, "c", after=r1, seq=2, xid="x1"),
+            event(100, "c", after=r2, seq=3, xid="x1"),
+            event(100, "commit", seq=4, xid="x1"),
+        ],
+        [
+            event(200, "u", before=r1, after=dict(r1, stock=7)),
+            event(201, "c", after=product_row(9, "X"), table="CUSTOMER"),
+            "{this is not json",
+        ],
+        [event(300, "d", before=r2)],
+    ]
+    for i, lines in enumerate(files):
+        write_tx_file(src, f"tx{i}.json", lines)
+    kw = {}
+    if mirror:
+        db_path = str(tmp_path / "mirror.db")
+        with sqlite3.connect(db_path) as db:
+            db.execute(
+                "CREATE TABLE products (id INT PRIMARY KEY, name VARCHAR(100),"
+                " description VARCHAR(500), price VARCHAR(20), stock INT,"
+                " created_date VARCHAR(30), updated_date VARCHAR(30))"
+            )
+
+        def factory():
+            sqlite3.register_adapter(decimal.Decimal, str)
+            return sqlite3.connect(db_path, timeout=60)
+
+        kw["jdbc_sink"] = {"connection_factory": factory, "table": "products"}
+    q = _run(spark, src, state, ckpt, max_files_per_trigger=2, **kw)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == sum(
+        len(lines) for lines in files
+    )
+    assert _rows(state.current())[1]["stock"] == 7
+    if mirror:
+        with sqlite3.connect(db_path) as db:
+            assert db.execute("SELECT id, stock FROM products").fetchall() == [
+                (1, 7)
+            ]
+
+
 def test_schema_evolution_new_column(spark, tmp_path):
     """K5 auto.evolve: a new source column appears mid-stream; old rows
     read as NULL, new rows carry it."""
