@@ -190,6 +190,10 @@ CANARIES = (
 CANARY_REF_NORM_SUM = 1.39
 CANARY_BAND = (0.75, 1.25)
 
+#: the driver keeps the last 2000 chars of stdout; past this many chars
+#: the extq2 + summary trailer lines leave under 100 chars of slack
+TRAILER_WARN_CHARS = 1900
+
 #: EXTENDED-tier canary trio (r14, from the canary's first live test):
 #: the headline canaries ran quiet (scale 1.25) while the extended tier
 #: of the same run inflated 1.5-3.2× — the two tiers run MINUTES apart,
@@ -556,6 +560,7 @@ def main() -> int:
     # ahead of them (the first may lose its head to the 2000-char
     # window; the second and everything after are safe by arithmetic:
     # ~645 + ~645 + ~930 ≈ 2200).
+    trailer = []
     if extended:
         ext_q = out["extended"]["queries"]
         ext_names = list(ext_q)
@@ -564,13 +569,13 @@ def main() -> int:
             ("extq1", ext_names[:half]),
             ("extq2", ext_names[half:]),
         ):
-            print(
+            trailer.append(
                 json.dumps(
                     {key: {n: round(ext_q[n], 3) for n in chunk}},
                     separators=(",", ":"),
                 )
             )
-    print(
+    trailer.append(
         json.dumps(
             {
                 "headline_sec": total,
@@ -591,6 +596,19 @@ def main() -> int:
             separators=(",", ":"),
         )
     )
+    # ADVICE r15: the "always inside the 2000-char window" arithmetic
+    # above erodes as the extended roster grows; say so at emit time
+    # (stderr, so stdout stays byte-compatible) before it silently breaks
+    tail = sum(len(line) + 1 for line in trailer[-2:])
+    if tail > TRAILER_WARN_CHARS:
+        print(
+            f"bench: warning: trailer tail is {tail} chars (> "
+            f"{TRAILER_WARN_CHARS}); the extq2 line may be clipped from "
+            "the last 2000 chars of stdout",
+            file=sys.stderr,
+        )
+    for line in trailer:
+        print(line)
     spark.stop()
     return 0
 

@@ -2,9 +2,14 @@
 
 Plays the role the Schema Registry + ksqlDB catalog play in the reference
 (docker-compose-main.yml:179-202, 112-141): a single place that resolves a
-logical table name to a typed DataFrame. Reads are plain
+logical table name to a typed DataFrame. Reads are
 ``spark.read.parquet`` so Catalyst keeps predicate pushdown, column pruning
-and partition pruning (verified in tests/test_plans.py).
+and partition pruning (verified in tests/test_plans.py). Like a registry,
+the catalog serves a schema it already has: the first read of a table
+runs Spark's own schema inference, later reads of the unchanged files
+hand that schema back through ``spark.read.schema`` and run no job.
+"Unchanged" is one function, ``table_fingerprint``, which every
+per-table memo in the engine keys on (``TableMemo``).
 """
 
 from __future__ import annotations
@@ -48,6 +53,63 @@ def read_parquet_retrying(
             time.sleep(delay_s)
 
 
+def table_fingerprint(sf_dir: str, name: str) -> tuple[str, tuple | None]:
+    """``(path, stat)`` for ``<sf_dir>/<name>.parquet``: the absolute path
+    and ``(relpath, size, mtime_ns)`` of every file under it, nested
+    directories included (a single-file table has relpath ``""``). The
+    one answer to "has this table changed" (ADVICE r14): the row-count,
+    schema and training memos all key on it. A few ``os.stat`` calls,
+    no Spark job. ``stat`` is None when a file vanishes between the
+    listing and its ``stat`` (a directory swap in flight); ``TableMemo``
+    treats that as a miss."""
+    path = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return path, (("", st.st_size, st.st_mtime_ns),)
+        out = []
+        for dirpath, _, files in sorted(os.walk(path)):
+            for f in sorted(files):
+                p = os.path.join(dirpath, f)
+                st = os.stat(p)
+                out.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
+    except FileNotFoundError:
+        return path, None
+    return path, tuple(out)
+
+
+class TableMemo:
+    """Values derived from one table's files, valid while they are
+    unchanged. One entry per table path, holding the fingerprint's stat
+    tuple and the values computed under it; a put under a different
+    stat replaces the entry, so a rewritten table drops everything
+    derived from its old files instead of accumulating stale keys. A
+    ``None`` stat is always a miss and is never stored."""
+
+    def __init__(self) -> None:
+        self._by_path: dict[str, tuple[tuple, dict]] = {}
+
+    def get(self, fp: tuple[str, tuple | None], key):
+        path, stat = fp
+        entry = self._by_path.get(path)
+        if stat is None or entry is None or entry[0] != stat:
+            return None
+        return entry[1].get(key)
+
+    def put(self, fp: tuple[str, tuple | None], key, value) -> None:
+        path, stat = fp
+        if stat is None:
+            return
+        entry = self._by_path.get(path)
+        if entry is None or entry[0] != stat:
+            entry = self._by_path[path] = (stat, {})
+        entry[1][key] = value
+
+
+#: per table: the Spark-inferred schema and the footer row count
+_TABLE_MEMO = TableMemo()
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table. Scale-note: at 100 TB these become
     partitioned/bucketed external tables; the call site stays identical.
@@ -68,13 +130,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       (``unix_micros`` et al.) refuse. The session timezone is pinned
       UTC (session.py), so casting NTZ→TIMESTAMP is value-identical to
       DuckDB's naive-UTC reading of the same column.
+
+    Schema memo: the first read of a table runs Spark's one-task
+    schema-inference job; its ``StructType`` is kept under the table's
+    fingerprint, and later reads of the same files pass it to
+    ``spark.read.schema`` and run no job. The cached value is what Spark
+    inferred (under the nanos conf set just above), so the NTZ and nanos
+    handling below sees the same types either way. A rewritten table has
+    a new fingerprint and is inferred again.
     """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TESTDATA_TABLES}")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = read_parquet_retrying(
-        spark.read.parquet, os.path.join(sf_dir, f"{name}.parquet")
-    )
+    fp = table_fingerprint(sf_dir, name)
+    schema = _TABLE_MEMO.get(fp, "schema")
+    if schema is None:
+        df = read_parquet_retrying(spark.read.parquet, fp[0])
+        _TABLE_MEMO.put(fp, "schema", df.schema)
+    else:
+        df = read_parquet_retrying(spark.read.schema(schema).parquet, fp[0])
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
@@ -87,26 +161,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view for spark.sql use."""
     for name in TESTDATA_TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-_NUM_ROWS_CACHE: dict[tuple, int] = {}
-
-
-def _path_stat_key(path: str) -> tuple:
-    """Cache key that invalidates when the parquet bytes change
-    (ADVICE r14: a path-only key would silently serve a stale count if
-    an sf_dir were regenerated in-process at a different cardinality).
-    A few os.stat calls — still jobless and microsecond-scale."""
-    if os.path.isdir(path):
-        sts = [
-            os.stat(os.path.join(path, f))
-            for f in sorted(os.listdir(path))
-            if f.endswith(".parquet")
-        ]
-        return (path, len(sts), sum(s.st_size for s in sts),
-                max((s.st_mtime_ns for s in sts), default=0))
-    st = os.stat(path)
-    return (path, st.st_size, st.st_mtime_ns)
 
 
 def parquet_num_rows(sf_dir: str, name: str) -> int:
@@ -127,13 +181,13 @@ def parquet_num_rows(sf_dir: str, name: str) -> int:
         raise KeyError(
             f"unknown table {name!r}; expected one of {TESTDATA_TABLES}"
         )
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    key = _path_stat_key(path)
-    hit = _NUM_ROWS_CACHE.get(key)
+    fp = table_fingerprint(sf_dir, name)
+    hit = _TABLE_MEMO.get(fp, "num_rows")
     if hit is not None:
         return hit
     import pyarrow.parquet as pq
 
+    path = fp[0]
     if os.path.isdir(path):
         n = sum(
             pq.read_metadata(os.path.join(path, f)).num_rows
@@ -142,5 +196,5 @@ def parquet_num_rows(sf_dir: str, name: str) -> int:
         )
     else:
         n = pq.read_metadata(path).num_rows
-    _NUM_ROWS_CACHE[key] = n
+    _TABLE_MEMO.put(fp, "num_rows", n)
     return n

@@ -10,8 +10,12 @@ logical plans survive a 1000-executor / 100 TB deployment:
 - Broadcast threshold raised to 64 MB: every dimension table in the star
   schema (region/nation/customer/supplier/part) is broadcast-able, so fact
   joins never shuffle the big side.
-- Shuffle partitions default to cores locally; on a real cluster this is
-  overridden to ~2-3x total cores and AQE coalesces down.
+- Shuffle partitions default to 32: AQE's starting width, which it
+  coalesces down at runtime; on a real cluster this is overridden to
+  ~2-3x total cores. Explicit fan-outs (repartition before a
+  per-partition UDF, the state-table bucket write, the fuzzy salted
+  blocks) size themselves by ``defaultParallelism``, the session's task
+  slots, instead.
 - UTC session timezone + ANSI semantics for deterministic, portable results.
 - Arrow enabled for the Pandas-UDF extension operators (ext/).
 """

@@ -348,15 +348,17 @@ def append_to_index(
     return manifest
 
 
-def _source_stat(sf_dir: str) -> list[list]:
+def _source_stat(sf_dir: str) -> list[list] | None:
     """Driver-side fingerprint of the source vector table: (relative
     path, size, mtime_ns) of every file under embeddings.parquet. Zero
     Spark jobs; changes whenever the table is regenerated, so a cached
     index can detect it serves a dead corpus. Delegates to
     ``_emb_fingerprint`` — the SAME scan keys the training memo, so
     the two mechanisms that must agree on "same corpus" cannot drift
-    (r9 code review; lists because the manifest round-trips JSON)."""
-    return [list(entry) for entry in _emb_fingerprint(sf_dir)]
+    (r9 code review; lists because the manifest round-trips JSON).
+    None when a file vanished mid-listing: the index is then not fresh."""
+    stat = _emb_fingerprint(sf_dir)[1]
+    return None if stat is None else [list(entry) for entry in stat]
 
 
 def index_exists(out_dir: str) -> bool:
@@ -372,9 +374,11 @@ def index_fresh(out_dir: str, sf_dir: str) -> bool:
         return False
     with open(os.path.join(out_dir, _MANIFEST)) as fh:
         manifest = json.load(fh)
+    src = _source_stat(sf_dir)
     return (
         manifest.get("format_version") == _FORMAT_VERSION
-        and manifest.get("source_stat") == _source_stat(sf_dir)
+        and src is not None
+        and manifest.get("source_stat") == src
     )
 
 

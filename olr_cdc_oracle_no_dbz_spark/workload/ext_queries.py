@@ -30,7 +30,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from olr_cdc_oracle_no_dbz_spark.catalog import parquet_num_rows
+from olr_cdc_oracle_no_dbz_spark.catalog import (
+    TableMemo,
+    parquet_num_rows,
+    table_fingerprint,
+)
 from olr_cdc_oracle_no_dbz_spark.checkpointing import truncate_lineage
 from olr_cdc_oracle_no_dbz_spark.graph import size_gated_broadcast
 from olr_cdc_oracle_no_dbz_spark.workload import register
@@ -2383,34 +2387,19 @@ def _nearest_cent(
 # ann_topk_ivfpq benched 8.1 s while the persisted-index serve path
 # proved the served cost is 1.5 s: the difference was pure repeated
 # training tax. The memo caches trained codebooks per (corpus
-# fingerprint, geometry) for the life of the Python process. Keys
-# carry a zero-Spark-jobs file fingerprint (the ann_index._source_stat
-# shape), so a regenerated corpus is a guaranteed miss and oracle
+# fingerprint, geometry) for the life of the Python process. It is a
+# ``catalog.TableMemo`` under the zero-Spark-jobs
+# ``catalog.table_fingerprint``, so a regenerated corpus is a guaranteed
+# miss that also evicts the old corpus's entries, and oracle
 # equivalence is untouched — a hit returns bit-identical codebooks to
 # what retraining would produce. Values are the KB-scale driver-side
 # centroid lists the trainers already collect.
-_TRAIN_MEMO: dict[tuple, list] = {}
-
-
-def _table_fingerprint(sf_dir: str, table: str) -> tuple:
-    """Driver-side fingerprint of one parquet table: (relpath, size,
-    mtime_ns) per file under <table>.parquet. Zero Spark jobs."""
-    root = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    if os.path.isfile(root):
-        st = os.stat(root)
-        return (("", st.st_size, st.st_mtime_ns),)
-    out = []
-    for dirpath, _, files in sorted(os.walk(root)):
-        for f in sorted(files):
-            p = os.path.join(dirpath, f)
-            st = os.stat(p)
-            out.append((os.path.relpath(p, root), st.st_size, st.st_mtime_ns))
-    return tuple(out)
+_TRAIN_MEMO = TableMemo()
 
 
 def _emb_fingerprint(sf_dir: str) -> tuple:
-    """Fingerprint of the vector table (see _table_fingerprint)."""
-    return _table_fingerprint(sf_dir, "embeddings")
+    """Fingerprint of the vector table (``catalog.table_fingerprint``)."""
+    return table_fingerprint(sf_dir, "embeddings")
 
 
 def _memo_count(e: DataFrame, memo: tuple | None) -> int:
@@ -2420,11 +2409,10 @@ def _memo_count(e: DataFrame, memo: tuple | None) -> int:
     fingerprint already determines)."""
     if memo is None:
         return e.count()
-    key = ("n", memo)
-    hit = _TRAIN_MEMO.get(key)
+    hit = _TRAIN_MEMO.get(memo, "n")
     if hit is None:
         hit = e.count()
-        _TRAIN_MEMO[key] = hit
+        _TRAIN_MEMO.put(memo, "n", hit)
     return hit
 
 
@@ -2496,8 +2484,8 @@ def _kmeans_train(
         # configuration). Callers must pass the FULL-corpus vector
         # projection — the fingerprint identifies the corpus, not an
         # arbitrary filtered subset of it.
-        mk = ("kmeans", memo, k, iters, _IVF_TRAIN_CAP, _IVF_CELL)
-        hit = _TRAIN_MEMO.get(mk)
+        mk = ("kmeans", k, iters, _IVF_TRAIN_CAP, _IVF_CELL)
+        hit = _TRAIN_MEMO.get(memo, mk)
         if hit is not None:
             return hit
     # sampled-training bound (r9): Lloyd rounds scan only the first
@@ -2537,7 +2525,7 @@ def _kmeans_train(
         )
         cents = sorted((r["cent_id"], list(r["cv"])) for r in means)
     if memo is not None:
-        _TRAIN_MEMO[mk] = cents
+        _TRAIN_MEMO.put(memo, mk, cents)
     return cents
 
 
@@ -5311,8 +5299,8 @@ def _pq_train(
         # binds the sampled-training cap and the subspace geometry
         # (r9 ADVICE — see the _kmeans_train key note); callers feed
         # raw full-corpus subvector slices of the _PQ_M/_PQ_SUB shape.
-        mk = ("pq", memo, k, iters, _PQ_TRAIN_CAP, _PQ_M, _PQ_SUB)
-        hit = _TRAIN_MEMO.get(mk)
+        mk = ("pq", k, iters, _PQ_TRAIN_CAP, _PQ_M, _PQ_SUB)
+        hit = _TRAIN_MEMO.get(memo, mk)
         if hit is not None:
             return hit
     train = subs.filter(F.col("vec_id") < _PQ_TRAIN_CAP)
@@ -5352,7 +5340,7 @@ def _pq_train(
         )
         cents = sorted((r["sub_idx"], r["c_idx"], list(r["cv"])) for r in means)
     if memo is not None:
-        _TRAIN_MEMO[mk] = cents
+        _TRAIN_MEMO.put(memo, mk, cents)
     return cents
 
 
@@ -7367,23 +7355,6 @@ _TS_SALT_MAX = 64
 _PAA_VEC_MEMO: dict[str, tuple] = {}
 
 
-def _ev_fingerprint(sf_dir: str) -> tuple:
-    """Driver-side fingerprint of the events table (the
-    ``_emb_fingerprint`` pattern): (relpath, size, mtime_ns) per file
-    under events.parquet. Zero Spark jobs."""
-    root = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    if os.path.isfile(root):
-        st = os.stat(root)
-        return (("", st.st_size, st.st_mtime_ns),)
-    out = []
-    for dirpath, _, files in sorted(os.walk(root)):
-        for f in sorted(files):
-            p = os.path.join(dirpath, f)
-            st = os.stat(p)
-            out.append((os.path.relpath(p, root), st.st_size, st.st_mtime_ns))
-    return tuple(out)
-
-
 def _paa_vec(spark: SparkSession, sf_dir: str) -> tuple[int, DataFrame]:
     """The PAA family's shared upstream, memoized per (session,
     corpus): per-user DENSE daily-value series (missing days explicit
@@ -7395,10 +7366,10 @@ def _paa_vec(spark: SparkSession, sf_dir: str) -> tuple[int, DataFrame]:
     bench's 3 samples — reuse one materialization instead of re-paying
     the events scan + two shuffles per query."""
     app = spark.sparkContext.applicationId
-    fp = _ev_fingerprint(sf_dir)
+    fp = table_fingerprint(sf_dir, "events")
     hit = _PAA_VEC_MEMO.get(app)
     if hit is not None:
-        if hit[0] == fp:
+        if hit[0] == fp and fp[1] is not None:
             return hit[1], hit[2]
         # corpus switched within the session (the scale probe's replica
         # dirs): drop the old entry's reference so ContextCleaner
@@ -9121,9 +9092,9 @@ def _fuzzy_salt(
     distribution). Returns ``(salt, n_groups)``; feed ``n_groups`` to
     ``_salted_block_sides`` so its broadcast hint degrades to a
     shuffle join past ``_FUZZY_BCAST_MAX_GROUPS``."""
-    fp = _table_fingerprint(sf_dir, "documents")
-    mk = ("fuzzy_salt", fp, key, tag, _FUZZY_BLOCK_POP, n_part)
-    hit = _TRAIN_MEMO.get(mk)
+    fp = table_fingerprint(sf_dir, "documents")
+    mk = ("fuzzy_salt", key, tag, _FUZZY_BLOCK_POP, n_part)
+    hit = _TRAIN_MEMO.get(fp, mk)
     if hit is None:
         occ, total = (
             gq.groupBy(key)
@@ -9142,7 +9113,7 @@ def _fuzzy_salt(
             ),
             int(total),
         )
-        _TRAIN_MEMO[mk] = hit
+        _TRAIN_MEMO.put(fp, mk, hit)
     return hit
 
 
@@ -9305,12 +9276,16 @@ def _fuzzy_blocked_groups(spark: SparkSession, sf_dir: str):
     # arrives as one file -> one partition, and without this every
     # candidate pair's O(80^2) DP would run in a single task (measured
     # 41s at sf0.1; 3.5s repartitioned). Hash-partitioning on the block
-    # key is also the co-location a cluster deployment wants; width
-    # follows the session's shuffle-partition setting, not a constant.
+    # key is also the co-location a cluster deployment wants; width is
+    # the session's task slots (defaultParallelism, the _spread rule),
+    # not spark.sql.shuffle.partitions: the Arrow Myers stage pays a
+    # fixed cost per task, so one task per slot beats 32 tasks in 8
+    # waves on a 4-core host, and the emitted rows are partitioning-
+    # invariant (see _salted_block_sides).
     # r11: the repartition moves into _salted_block_sides, which also
     # splits a single HOT block's enumeration across tasks (the
     # overlap-mode skew the blk-hash alone cannot touch).
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = spark.sparkContext.defaultParallelism
     salt, n_groups = _fuzzy_salt(g, "blk", "blkhead", sf_dir, n_part)
     a, b, cond = _salted_block_sides(g, "blk", n_part, salt, n_groups)
     # r10 (VERDICT r9 item 2): the cheap lower bound discharges a pair
@@ -9611,7 +9586,7 @@ def dedup_fuzzy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     m4 = ranked.filter(F.col("grn") <= 4).select(
         "gid", F.col("doc_id").alias("member_id")
     )
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = spark.sparkContext.defaultParallelism
     # r11: salt-split hot blocks across tasks (_salted_block_sides)
     salt, n_groups = _fuzzy_salt(reps, "blk", "blkhead", sf_dir, n_part)
     x, y, cond = _salted_block_sides(reps, "blk", n_part, salt, n_groups)
@@ -9783,7 +9758,7 @@ def dedup_fuzzy_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=False,
     )
     # r11: salt-split hot blocks across tasks (_salted_block_sides)
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = spark.sparkContext.defaultParallelism
     salt, n_groups = _fuzzy_salt(g, "blk", "blkhead", sf_dir, n_part)
     a, b, cond = _salted_block_sides(g, "blk", n_part, salt, n_groups)
     # r10 (VERDICT r9 item 2): theorem lower bound gates the DP; the
@@ -9935,7 +9910,7 @@ def dedup_fuzzy_multiblock(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("b1", "b2", "head", "gid", "n", *_fuzzy_probe_cols()),
         eager=False,
     )
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = spark.sparkContext.defaultParallelism
     lb = _fuzzy_lb(
         "a.hlen", "b.hlen", "a.pcnt", "b.pcnt", "a.bcnt", "b.bcnt"
     )

@@ -377,13 +377,22 @@ def test_registry_gate_construction_is_job_free(spark, q):
     ran an eager lineage-cut + count() at query CONSTRUCTION — a real
     corpus job plus a stranded checkpoint per plan-only construction.
     r14: producers pass jobless parquet-footer upper bounds (or defer
-    to AQE for vocabulary relations), so constructing these queries
-    triggers nothing beyond single-task parquet METADATA jobs (file
-    index/footer — the cost of spark.read.parquet itself).
-    dedup_semantic_apply is constructed twice: its first construction
-    legitimately runs the memoized capped-sample Lloyd training (inline
-    centroid literals, by design); the second must be metadata-only."""
-    q["dedup_semantic_apply"](spark, SF_DIR)  # warm the Lloyd memo
+    to AQE for vocabulary relations). What was left was one single-task
+    parquet schema-inference job per table load; ``catalog.load_table``
+    now memoizes the inferred schema under the table's file
+    fingerprint, so after ONE warm construction, building each query
+    again runs no Spark job at all. The warm construction also runs
+    dedup_semantic_apply's memoized capped-sample Lloyd training
+    (inline centroid literals, by design). The last seven names are
+    benchmark-roster queries whose only construction-time work was
+    loading tables.
+
+    Two names still run one job each, and the test counts it exactly: a
+    lazy lineage cut over an aggregate (``truncate_lineage(eager=False)``
+    — ``dedup_minhash_lsh``'s signature table, the tf-idf term table)
+    runs its AQE shuffle-map stage when Spark builds the checkpoint RDD,
+    a single-task data job at sf0.001, not a metadata one."""
+    cut_stage_jobs = {"corpus_decontaminate_apply": 1, "text_tfidf_top_terms": 1}
     for name in (
         "cdc_purge_keys",
         "corpus_source_report",
@@ -393,9 +402,47 @@ def test_registry_gate_construction_is_job_free(spark, q):
         "text_tfidf_top_terms",
         "graph_pagerank_transitions",
         "dedup_semantic_apply",
+        "cdc_current_state",
+        "cdc_state_enriched",
+        "tpch_q1_pricing_summary",
+        "tpch_q5_local_supplier",
+        "tpch_q18_large_orders",
+        "window_session",
+        "join_interval",
     ):
+        q[name](spark, SF_DIR)  # warm: schema inference, training memos
         jobs = _jobs_during(spark, lambda: q[name](spark, SF_DIR))
-        assert all(js == (1, 1) for js in jobs), (name, jobs)
+        assert jobs == [(1, 1)] * cut_stage_jobs.get(name, 0), (name, jobs)
+
+
+def test_fuzzy_salted_block_width_is_task_slots(spark, q):
+    """The fuzzy family's salted-block repartition is sized by the
+    session's task slots (``defaultParallelism``, the ``_spread`` rule),
+    not by ``spark.sql.shuffle.partitions``: its Arrow Myers stage pays
+    a fixed cost per task, and a width copied from the shuffle setting
+    (32 in the engine session) ran that stage in 8 waves on 4 cores.
+    The shuffle setting is moved away from the slot count here (16 on
+    the suite's local[4] session) so the two rules give different
+    widths."""
+    import re
+
+    slots = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(4 * slots))
+    try:
+        for name in (
+            "dedup_fuzzy_levenshtein",
+            "dedup_fuzzy_topk",
+            "dedup_fuzzy_groups",
+            "dedup_fuzzy_multiblock",
+        ):
+            widths = re.findall(
+                r"hashpartitioning\([^)]*, (\d+)\), REPARTITION_BY_NUM",
+                _plan(q[name](spark, SF_DIR)),
+            )
+            assert widths and set(widths) == {str(slots)}, (name, widths)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_tfidf_vocab_join_aqe_broadcasts_at_gate_scale(spark, q):
