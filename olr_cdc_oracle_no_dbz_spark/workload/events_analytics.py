@@ -573,8 +573,8 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``graph.connected_components``: the DuckDB oracle replays the
     labeling as a recursive-CTE transitive closure over the identical
     edge relation, so the driver compares the distributed fixpoint
-    (min-label propagation / star contraction / the r13 driver
-    union-find cutover, per ``spark.graft.cc.algorithm``) against an
+    (``algorithm="auto"``: min-label propagation falling back to star
+    contraction, or the r13 driver union-find cutover) against an
     independent engine at both SFs. Component sizes come from one
     aggregate over the (small) label relation, joined back through a
     size-gated broadcast — sizes ≤ labels, so the label count bounds
@@ -606,10 +606,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    labels = connected_components(
-        edges,
-        algorithm=str(spark.conf.get("spark.graft.cc.algorithm", "auto")),
-    )
+    labels = connected_components(edges, algorithm="auto")
     n_labels = getattr(labels, "_graft_n_rows", None)
     sizes = labels.groupBy("cluster_id").agg(
         F.count("*").cast("long").alias("component_size")

@@ -38,6 +38,13 @@ from olr_cdc_oracle_no_dbz_spark.catalog import (
 from olr_cdc_oracle_no_dbz_spark.checkpointing import truncate_lineage
 from olr_cdc_oracle_no_dbz_spark.graph import size_gated_broadcast
 from olr_cdc_oracle_no_dbz_spark.workload import register
+from olr_cdc_oracle_no_dbz_spark.workload.neardup import (
+    apply_keep_min,
+    group_labels,
+    group_pair_rows,
+    symmetrize,
+    topk_from_group_pairs,
+)
 from olr_cdc_oracle_no_dbz_spark.workload.util import t
 
 # ---------------------------------------------------------------------------
@@ -612,13 +619,9 @@ def dedup_minhash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-Jaccard verify all run over REPRESENTATIVES only, and
     per-doc answers expand from (a) up to 3 same-group twin-mates at
     Jaccard 1.0 and (b) the members of the group's top-3 neighbor
-    groups. Sufficiency: candidates rank by (jaccard DESC, id); any
-    group holding a doc's global top-3 cross-group neighbor must be
-    among the top-3 groups by (jaccard DESC, min member id) — each
-    lexicographically-earlier group contributes a strictly-earlier
-    candidate (its min member) — and within a group only the 3
-    smallest ids can appear in anyone's top-3. Groups whose text
-    yields NO 3-shingles (< 3 words) have no signature, no candidates,
+    groups, ranked by (jaccard DESC, id) — the sufficiency argument is
+    ``neardup.topk_from_group_pairs``'. Groups whose text yields NO
+    3-shingles (< 3 words) have no signature, no candidates,
     and no twin-mate rows — exactly the naive gate's behavior. The
     ORACLE stays the naive enumerate-then-rank; the gate certifies
     collapse+expand == naive row-for-row at both SFs.
@@ -644,78 +647,20 @@ def dedup_minhash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=False,
     )
     reps = ranked.filter(F.col("grn") == 1).select("gid", "text")
-    m4 = ranked.filter(F.col("grn") <= 4).select(
-        "gid", F.col("doc_id").alias("member_id")
-    )
     pairs, sizes = _minhash_rep_pairs(
         reps, n_bound=parquet_num_rows(sf_dir, "documents")
     )
-    gpairs = pairs.select(
-        F.col("a_gid").alias("g"), F.col("b_gid").alias("h"), "jaccard"
-    )
-    # both orientations via ONE explode (r10): a self-union re-executes
-    # the whole _minhash_rep_pairs pipeline — shingling, signatures,
-    # band join, exact-Jaccard verify — once per branch (the
-    # dedup_simhash_topk finding, measured there at 58 s vs 34 s)
-    gsym = gpairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("g"), F.col("h"), F.col("jaccard")),
-                F.struct(
-                    F.col("h").alias("g"),
-                    F.col("g").alias("h"),
-                    F.col("jaccard"),
-                ),
-            )
-        ).alias("s")
-    ).select("s.*")
-    wtop = Window.partitionBy("g").orderBy(F.col("jaccard").desc(), "h")
-    topg = (
-        gsym.withColumn("grk", F.row_number().over(wtop))
-        .filter(F.col("grk") <= 3)
-        .select("g", "h", "jaccard")
-    )
-    docs = ranked.select("doc_id", "gid")
-    # twin-mates exist only for groups that HAVE a signature (≥ 1
-    # shingle) — sizes holds exactly those gids
-    mates = (
-        docs.join(sizes.select("gid"), "gid")
-        .join(m4, "gid")
-        .filter(F.col("member_id") != F.col("doc_id"))
-        .select(
-            "doc_id",
-            F.col("member_id").alias("neighbor_id"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    h3 = (
-        m4.withColumn(
-            "mrn",
-            F.row_number().over(
-                Window.partitionBy("gid").orderBy("member_id")
-            ),
-        )
-        .filter(F.col("mrn") <= 3)
-        .select(F.col("gid").alias("h"), "member_id")
-    )
-    cross_cand = (
-        docs.join(topg, docs["gid"] == topg["g"])
-        .join(h3, "h")
-        .select(
-            "doc_id",
-            F.col("member_id").alias("neighbor_id"),
-            "jaccard",
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("jaccard").desc(), "neighbor_id"
-    )
-    return (
-        mates.unionAll(cross_cand)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("doc_id", "neighbor_id", "jaccard", "rk")
-    )
+    gsym = symmetrize(pairs, "a_gid", "b_gid", "jaccard")
+    # twin-mates at Jaccard 1.0 exist only for groups that HAVE a
+    # signature (≥ 1 shingle) — sizes holds exactly those gids
+    return topk_from_group_pairs(
+        gsym,
+        ranked,
+        "doc_id",
+        "jaccard",
+        desc=True,
+        mate_score=sizes.select("gid", F.lit(1.0).alias("jaccard")),
+    ).select("doc_id", "neighbor_id", "jaccard", "rk")
 
 
 @register(
@@ -800,7 +745,7 @@ def dedup_minhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     count. Under K-fold exact-twin replication the pair gate's output
     grows ~K² by contract while this relation is invariant, and
     Σ n_member_pairs over it reproduces the pair gate's row count
-    (pinned in tests/test_group_contracts.py).
+    (``neardup.group_pair_rows``).
 
     Scale: the collapse is one md5 groupBy; every downstream relation
     is sized by distinct content; no distance threshold is lost —
@@ -817,42 +762,19 @@ def dedup_minhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ga = g.select(F.col("gid").alias("a_gid"), F.col("n").alias("n_a"))
     gb = g.select(F.col("gid").alias("b_gid"), F.col("n").alias("n_b"))
-    crossp = (
-        pairs.join(ga, "a_gid")
-        .join(gb, "b_gid")
-        .select(
-            F.col("a_gid").alias("group_a"),
-            F.col("b_gid").alias("group_b"),
-            "n_a",
-            "n_b",
-            "jaccard",
-            (F.col("n_a") * F.col("n_b")).cast("bigint").alias(
-                "n_member_pairs"
-            ),
-        )
-    )
-    selfp = (
-        g.join(sizes.select("gid"), "gid")
-        .filter(F.col("n") > 1)
-        .select(
-            F.col("gid").alias("group_a"),
-            F.col("gid").alias("group_b"),
-            F.col("n").alias("n_a"),
-            F.col("n").alias("n_b"),
-            F.lit(1.0).alias("jaccard"),
-            F.expr("CAST((n * (n - 1)) DIV 2 AS BIGINT)").alias(
-                "n_member_pairs"
-            ),
-        )
-    )
-    return crossp.unionAll(selfp).select(
-        "group_a",
-        "group_b",
+    crossp = pairs.join(ga, "a_gid").join(gb, "b_gid").select(
+        F.col("a_gid").alias("group_a"),
+        F.col("b_gid").alias("group_b"),
         "n_a",
         "n_b",
         "jaccard",
-        (F.col("jaccard") >= 0.8).alias("is_dup"),
-        "n_member_pairs",
+    )
+    # self-rows only for groups WITH a signature (sizes' gids)
+    return group_pair_rows(
+        crossp,
+        g.join(sizes.select("gid"), "gid"),
+        {"jaccard": F.lit(1.0)},
+        flag=(F.col("jaccard") >= 0.8).alias("is_dup"),
     )
 
 
@@ -1435,18 +1357,15 @@ def _simhash_member_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     count — then every member's signature equals its rep's signature
     bit for bit, band collisions expand verbatim, twins (identical
     sigs) always collide on every band so every n≥2 group self-edges
-    unconditionally, and member-pair hamming = rep-pair hamming. The
+    unconditionally, and member-pair hamming = rep-pair hamming — so
+    the member relation is the group relation's expansion and
+    ``neardup.group_labels``' contraction argument applies. The
     ORACLE replays the doc-level enumeration, so the differential gate
     at both SFs (twin-bearing corpora) certifies the equivalence.
 
     Scale: signature pipeline, banding, and CC are sized by distinct
     content — invariant under twin skew; the ~K² member-pair mass of
     the pair gate is never materialized on the apply path."""
-    from olr_cdc_oracle_no_dbz_spark.graph import (
-        connected_components,
-        size_gated_broadcast,
-    )
-
     d = t(spark, sf_dir, "documents")
     # MEMBER count: width + centering derive from this (r14: jobless
     # exact footer count — same value as count() on the base table)
@@ -1489,27 +1408,15 @@ def _simhash_member_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CAST({_sig_int_centered(n, nbits)} AS BIGINT) AS sig",
     )
     cand = _simhash_cand(sig, w, n_docs=n)
-    gedges = (
-        cand.filter(F.expr("bit_count(xsig ^ ysig)") <= 3)
-        .selectExpr("a_id AS s", "b_id AS d")
-        .unionAll(
-            g.filter(F.col("n_mem") >= 2).selectExpr("gid AS s", "gid AS d")
-        )
+    glabels = group_labels(
+        cand.filter(F.expr("bit_count(xsig ^ ysig)") <= 3).selectExpr(
+            "a_id AS s", "b_id AS d"
+        ),
+        g.filter(F.col("n_mem") >= 2).select("gid"),
     )
-    glabels = connected_components(
-        gedges,
-        algorithm=str(spark.conf.get("spark.graft.cc.algorithm", "auto")),
-    )
-    n_groups_labeled = getattr(glabels, "_graft_n_rows", None)
     return (
         g.select("gid", "mids")
-        .join(
-            size_gated_broadcast(
-                glabels.withColumnRenamed("doc_id", "gid"),
-                n_rows=n_groups_labeled,
-            ),
-            "gid",
-        )
+        .join(glabels, "gid")
         .select(F.explode("mids").alias("doc_id"), "cluster_id")
     )
 
@@ -1530,31 +1437,14 @@ def dedup_simhash_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design (late r13): components on the TWIN-COLLAPSED group
     relation with member-weighted centering
     (``_simhash_member_labels`` — exact equivalence argued there and
-    certified by the doc-level oracle at both SFs), then one
-    size-gated-broadcast left join + row-local filter; the documents
-    table never shuffles while the label relation fits the gate, and
-    past it (the label set is O(corpus) under real duplication rates)
-    the hint drops and the join plans as a plain key shuffle join
-    instead of OOMing. The ORACLE replays the naive doc-level
+    certified by the doc-level oracle at both SFs), then
+    ``neardup.apply_keep_min``'s one size-gated-broadcast left join +
+    row-local filter. The ORACLE replays the naive doc-level
     banded-candidate + popcount enumeration and a recursive-CTE
     closure, certifying signatures, banding, CC, and keep rule
     together."""
-    from olr_cdc_oracle_no_dbz_spark.graph import size_gated_broadcast
-
-    labels = _simhash_member_labels(spark, sf_dir)
-    d = t(spark, sf_dir, "documents")
-    joined = d.join(size_gated_broadcast(labels), "doc_id", "left")
-    return joined.filter(
-        F.col("cluster_id").isNull()
-        | (F.col("cluster_id") == F.col("doc_id"))
-    ).select(
-        "doc_id",
-        "lang",
-        "source",
-        "n_chars",
-        F.when(F.col("cluster_id").isNotNull(), "simhash_keeper")
-        .otherwise("unique")
-        .alias("kept_reason"),
+    return apply_keep_min(
+        spark, sf_dir, _simhash_member_labels(spark, sf_dir), "simhash_keeper"
     )
 
 
@@ -1594,32 +1484,14 @@ def dedup_simhash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig, w = _simhash_sig(d, F.explode(F.split("text", " ")), n)
     cand = _simhash_cand(sig, w, n_docs=n)
     ham = F.expr("bit_count(xsig ^ ysig)").cast("long")
-    # both orientations via ONE explode, not a self-union: a union of
-    # two selects over cand re-executes the whole signature pipeline
-    # per branch (measured 58 s vs 34 s for the pair gate at sf0.01)
-    sym = cand.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("a_id").alias("src"),
-                    F.col("b_id").alias("nbr"),
-                    ham.alias("hamming"),
-                ),
-                F.struct(
-                    F.col("b_id").alias("src"),
-                    F.col("a_id").alias("nbr"),
-                    ham.alias("hamming"),
-                ),
-            )
-        ).alias("s")
-    ).select("s.*")
-    win = Window.partitionBy("src").orderBy("hamming", "nbr")
+    sym = symmetrize(cand, "a_id", "b_id", ham.alias("hamming"))
+    win = Window.partitionBy("g").orderBy("hamming", "h")
     return (
         sym.withColumn("rk", F.row_number().over(win).cast("long"))
         .filter(F.col("rk") <= 3)
         .select(
-            F.col("src").alias("doc_id"),
-            F.col("nbr").alias("nbr_id"),
+            F.col("g").alias("doc_id"),
+            F.col("h").alias("nbr_id"),
             "hamming",
             "rk",
         )
@@ -1708,38 +1580,18 @@ def dedup_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _simhash_cand(sig, w, n_docs=n_reps)
     ga = g.select(F.col("gid").alias("a_id"), F.col("n").alias("n_a"))
     gb = g.select(F.col("gid").alias("b_id"), F.col("n").alias("n_b"))
-    crossp = (
-        cand.join(ga, "a_id")
-        .join(gb, "b_id")
-        .select(
-            F.col("a_id").alias("group_a"),
-            F.col("b_id").alias("group_b"),
-            "n_a",
-            "n_b",
-            F.expr("bit_count(xsig ^ ysig)").cast("long").alias("hamming"),
-            (F.col("n_a") * F.col("n_b")).cast("bigint").alias(
-                "n_member_pairs"
-            ),
-        )
-    )
-    selfp = g.filter(F.col("n") > 1).select(
-        F.col("gid").alias("group_a"),
-        F.col("gid").alias("group_b"),
-        F.col("n").alias("n_a"),
-        F.col("n").alias("n_b"),
-        F.lit(0).cast("long").alias("hamming"),
-        F.expr("CAST((n * (n - 1)) DIV 2 AS BIGINT)").alias(
-            "n_member_pairs"
-        ),
-    )
-    return crossp.unionAll(selfp).select(
-        "group_a",
-        "group_b",
+    crossp = cand.join(ga, "a_id").join(gb, "b_id").select(
+        F.col("a_id").alias("group_a"),
+        F.col("b_id").alias("group_b"),
         "n_a",
         "n_b",
-        "hamming",
-        (F.col("hamming") <= 3).alias("is_dup"),
-        "n_member_pairs",
+        F.expr("bit_count(xsig ^ ysig)").cast("long").alias("hamming"),
+    )
+    return group_pair_rows(
+        crossp,
+        g,
+        {"hamming": F.lit(0).cast("long")},
+        flag=(F.col("hamming") <= 3).alias("is_dup"),
     )
 
 
@@ -1896,15 +1748,11 @@ def dedup_embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise cosines run over REPRESENTATIVES only, and per-vector
     answers expand from (a) up to 3 same-group twin mates at the
     group's self-cosine and (b) the members of the group's top-3
-    neighbor groups. Sufficiency (the dedup_minhash_topk argument):
-    candidates rank by (cos DESC, id); within a group all members
-    share one cosine, so only the 3 smallest ids can reach anyone's
-    top-3, and any group holding a vector's top-3 cross-group neighbor
-    must be among the top-3 groups by (cos DESC, gid) since each
-    earlier group contributes a strictly-earlier candidate (its min
-    member). The LSH bit count derives from the DISTINCT-vector count
-    (contract; the ORACLE replays the same derivation but expands
-    members naively, certifying every Spark-side prune).
+    neighbor groups, ranked by (cos DESC, id) — the sufficiency
+    argument is ``neardup.topk_from_group_pairs``'. The LSH bit count
+    derives from the DISTINCT-vector count (contract; the ORACLE
+    replays the same derivation but expands members naively,
+    certifying every Spark-side prune).
 
     Scale: collapse is one window over the vector; the bucket join and
     cosines are sized by distinct content; the final per-vector top-3
@@ -1947,70 +1795,25 @@ def dedup_embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("a.gid").alias("gq"), F.col("b.gid").alias("gn"), cos.alias("cos")
     )
-    # both orientations via ONE explode (the dedup_simhash_topk trick:
-    # a union of two selects re-executes the bucket join per branch)
-    gsym = gp.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("gq").alias("g"), F.col("gn").alias("h"), F.col("cos")
-                ),
-                F.struct(
-                    F.col("gn").alias("g"), F.col("gq").alias("h"), F.col("cos")
-                ),
-            )
-        ).alias("s")
-    ).select("s.*")
-    wtop = Window.partitionBy("g").orderBy(F.col("cos").desc(), "h")
-    topg = (
-        gsym.withColumn("grk", F.row_number().over(wtop))
-        .filter(F.col("grk") <= 3)
-        .select("g", "h", "cos")
-    )
-    docs = ranked.select("vec_id", "gid")
-    m4 = ranked.filter(F.col("grn") <= 4).select(
-        "gid", F.col("vec_id").alias("member_id")
-    )
+    gsym = symmetrize(gp, "gq", "gn", "cos")
     cself = e.select(
         "gid",
         (F.col("nsq") / (F.sqrt("nsq") * F.sqrt("nsq")))
         .cast("decimal(16,8)")
         .alias("cos"),
     )
-    mates = (
-        docs.join(m4, "gid")
-        .filter(F.col("member_id") != F.col("vec_id"))
-        .join(cself, "gid")
-        .select("vec_id", F.col("member_id").alias("neighbor_id"), "cos")
-    )
-    h3 = (
-        m4.withColumn(
-            "mrn",
-            F.row_number().over(
-                Window.partitionBy("gid").orderBy("member_id")
-            ),
-        )
-        .filter(F.col("mrn") <= 3)
-        .select(F.col("gid").alias("h"), "member_id")
-    )
-    crossc = (
-        docs.join(topg, docs["gid"] == topg["g"])
-        .join(h3, "h")
-        .select("vec_id", F.col("member_id").alias("neighbor_id"), "cos")
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), "neighbor_id"
-    )
-    return (
-        mates.unionAll(crossc)
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 3)
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.col("cos").cast("string").alias("cos_sim"),
-            "rk",
-        )
+    return topk_from_group_pairs(
+        gsym,
+        ranked,
+        "vec_id",
+        "cos",
+        desc=True,
+        mate_score=cself,
+    ).select(
+        "vec_id",
+        "neighbor_id",
+        F.col("cos").cast("string").alias("cos_sim"),
+        F.col("rk").cast("long").alias("rk"),
     )
 
 
@@ -2051,8 +1854,8 @@ def dedup_embedding_cosine_groups(spark: SparkSession, sf_dir: str) -> DataFrame
     while this relation is invariant, and Σ n_member_pairs over it
     reproduces the pair gate's row count whenever the derived bit
     count agrees (it does on every gate corpus and the twin-test
-    corpus: the 8-bit floor binds through n ≤ 2048 — pinned in
-    tests/test_group_contracts.py). The bit count derives from the
+    corpus: the 8-bit floor binds through n ≤ 2048 —
+    ``neardup.group_pair_rows``). The bit count derives from the
     DISTINCT-vector corpus by contract.
 
     Scale: collapse is one groupBy on the vector; every downstream
@@ -2103,28 +1906,20 @@ def dedup_embedding_cosine_groups(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("a.n").alias("n_a"),
         F.col("b.n").alias("n_b"),
         cos.alias("cos"),
-        (F.col("a.n") * F.col("b.n")).cast("bigint").alias("n_member_pairs"),
     )
-    selfp = e.filter(F.col("n") > 1).select(
-        F.col("gid").alias("group_a"),
-        F.col("gid").alias("group_b"),
-        F.col("n").alias("n_a"),
-        F.col("n").alias("n_b"),
-        (F.col("nsq") / (F.sqrt("nsq") * F.sqrt("nsq")))
-        .cast("decimal(16,8)")
-        .alias("cos"),
-        F.expr("CAST((n * (n - 1)) DIV 2 AS BIGINT)").alias(
-            "n_member_pairs"
+    return group_pair_rows(
+        crossp,
+        e,
+        {
+            "cos": (F.col("nsq") / (F.sqrt("nsq") * F.sqrt("nsq"))).cast(
+                "decimal(16,8)"
+            )
+        },
+        flag=(F.col("cos") >= F.lit("0.4").cast("decimal(16,8)")).alias(
+            "is_near"
         ),
-    )
-    return crossp.unionAll(selfp).select(
-        "group_a",
-        "group_b",
-        "n_a",
-        "n_b",
-        F.col("cos").cast("string").alias("cos_sim"),
-        (F.col("cos") >= F.lit("0.4").cast("decimal(16,8)")).alias("is_near"),
-        "n_member_pairs",
+    ).withColumn("cos", F.col("cos").cast("string")).withColumnRenamed(
+        "cos", "cos_sim"
     )
 
 
@@ -3460,29 +3255,19 @@ def _minhash_group_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     group pair relation + member expansion (r13 — the fuzzy apply's
     group-CC discipline extended to this family).
 
-    Equivalence to CC on dedup_minhash_lsh's member pairs is EXACT:
-    the MinHash signature is a pure per-doc function of text (SimHash
+    Equivalence to CC on dedup_minhash_lsh's member pairs is EXACT
+    (the contraction argument is ``neardup.group_labels``'): the
+    MinHash signature is a pure per-doc function of text (SimHash
     needs the extra member-weighted-centering step —
-    ``_simhash_member_labels``), so the
-    member pair relation IS the expansion of the group pair relation
-    (Σ n_member_pairs == pair-gate rows, pinned in
-    tests/test_group_contracts.py); contracting identical-content
-    groups preserves connectivity, and gid = min member doc_id makes
-    the group-component minimum equal the doc-component minimum.
-    Within-group twin edges exist in the doc relation exactly when the
-    group has ≥ 2 members AND a signature (≥ 1 shingle — shingle-less
-    twins emit no pairs), so those groups enter as self-edges. Labeling
-    equality vs doc-level CC is pinned in tests/test_apply_gates.py.
+    ``_simhash_member_labels``), so the member pair relation IS the
+    expansion of the group pair relation. Within-group twin edges
+    exist in the doc relation exactly when the group has ≥ 2 members
+    AND a signature (≥ 1 shingle — shingle-less twins emit no pairs),
+    so exactly those groups enter as self-edges.
 
-    Scale: CC input is invariant under twin replication; the member
-    expansion is one id-only join through a size-gated broadcast; the
-    (potentially O(corpus)) doc-label relation is returned UNhinted —
-    consumers gate it themselves."""
-    from olr_cdc_oracle_no_dbz_spark.graph import (
-        connected_components,
-        size_gated_broadcast,
-    )
-
+    Scale: the member expansion is one id-only join through a
+    size-gated broadcast; the (potentially O(corpus)) doc-label
+    relation is returned UNhinted — consumers gate it themselves."""
     d = t(spark, sf_dir, "documents")
     # member ids ride the SAME md5 groupBy that builds the group table
     # (collect_list is bounded by twin multiplicity, and the pair
@@ -3502,31 +3287,17 @@ def _minhash_group_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         g.select("gid", "text"),
         n_bound=parquet_num_rows(sf_dir, "documents"),
     )
-    gedges = (
-        pairs.filter(F.col("jaccard") >= 0.8)
-        .selectExpr("a_gid AS s", "b_gid AS d")
-        .unionAll(
-            g.join(sizes.select("gid"), "gid")
-            .filter(F.col("n") >= 2)
-            .selectExpr("gid AS s", "gid AS d")
-        )
-    )
-    glabels = connected_components(
-        gedges,
-        algorithm=str(
-            spark.conf.get("spark.graft.cc.algorithm", "auto")
+    glabels = group_labels(
+        pairs.filter(F.col("jaccard") >= 0.8).selectExpr(
+            "a_gid AS s", "b_gid AS d"
         ),
+        g.join(sizes.select("gid"), "gid")
+        .filter(F.col("n") >= 2)
+        .select("gid"),
     )
-    n_groups_labeled = getattr(glabels, "_graft_n_rows", None)
     return (
         g.select("gid", "mids")
-        .join(
-            size_gated_broadcast(
-                glabels.withColumnRenamed("doc_id", "gid"),
-                n_rows=n_groups_labeled,
-            ),
-            "gid",
-        )
+        .join(glabels, "gid")
         .select(F.explode("mids").alias("doc_id"), "cluster_id")
     )
 
@@ -3596,14 +3367,14 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     r13: components run on the TWIN-COLLAPSED group pair relation with
     member expansion (``_minhash_group_labels`` — exact equivalence
     argued and pinned there), so CC cost is invariant under twin skew.
-    Min-label propagation by default (O(component diameter) rounds —
-    near-dup clusters are shallow), or large-star/small-star
-    contraction (O(log n) rounds, the adversarial-long-chain answer)
-    under ``spark.graft.cc.algorithm=starcontraction``. Both labelings
-    are identical (property-tested vs union-find, tests/test_graph.py);
-    per-round lineage cuts go through ``truncate_lineage`` (durable-
-    checkpoint aware), and the only driver-side data is the per-round
-    convergence count.
+    Min-label propagation (O(component diameter) rounds — near-dup
+    clusters are shallow) with a bounded round budget, falling back to
+    large-star/small-star contraction (O(log n) rounds, the
+    adversarial-long-chain answer) when the budget runs out. Both
+    labelings are identical (property-tested vs union-find,
+    tests/test_graph.py); per-round lineage cuts go through
+    ``truncate_lineage`` (durable-checkpoint aware), and the only
+    driver-side data is the per-round convergence count.
 
     DuckDB oracle: recursive CTE transitive closure with MIN(root) —
     identical fixpoint by construction."""
@@ -3649,30 +3420,13 @@ def corpus_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale design: the cluster labeling runs on the TWIN-COLLAPSED
     group pair graph (r13, ``_minhash_group_labels`` — invariant under
-    twin skew, exact equivalence pinned); applying it is one size-
-    gated-broadcast left join of the label table onto the corpus
-    followed by a row-local filter — no new shuffle of the documents
-    beyond that join while the labels fit the gate; past it (the
-    label set is O(corpus) under real 30–50% duplication) the hint
-    drops and the join plans as a plain key shuffle join. The oracle
+    twin skew, exact equivalence pinned); applying it is
+    ``neardup.apply_keep_min``'s one size-gated-broadcast left join
+    plus a row-local filter. The oracle
     replays the keep rule over the same registered cluster oracle, so
     report and application can never disagree."""
-    from olr_cdc_oracle_no_dbz_spark.graph import size_gated_broadcast
-
-    labels = _minhash_group_labels(spark, sf_dir)
-    d = t(spark, sf_dir, "documents")
-    joined = d.join(size_gated_broadcast(labels), "doc_id", "left")
-    return joined.filter(
-        F.col("cluster_id").isNull()
-        | (F.col("cluster_id") == F.col("doc_id"))
-    ).select(
-        "doc_id",
-        "lang",
-        "source",
-        "n_chars",
-        F.when(F.col("cluster_id").isNotNull(), "cluster_keeper")
-        .otherwise("unique")
-        .alias("kept_reason"),
+    return apply_keep_min(
+        spark, sf_dir, _minhash_group_labels(spark, sf_dir), "cluster_keeper"
     )
 
 
@@ -6879,19 +6633,10 @@ def corpus_decontaminate_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
         )
 
-    # both orientations via ONE explode (r10): a self-union re-runs the
-    # entire dedup_minhash_lsh pipeline once per branch
-    sym = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a_id").alias("x"), F.col("b_id").alias("y")),
-                F.struct(F.col("b_id").alias("x"), F.col("a_id").alias("y")),
-            )
-        ).alias("s")
-    ).select("s.*")
     contaminated = (
-        sym.filter((split_of("x") == "train") & (split_of("y") != "train"))
-        .select(F.col("x").alias("doc_id"))
+        symmetrize(pairs, "a_id", "b_id")
+        .filter((split_of("g") == "train") & (split_of("h") != "train"))
+        .select(F.col("g").alias("doc_id"))
         .distinct()
     )
     d = t(spark, sf_dir, "documents")
@@ -7469,6 +7214,181 @@ def _ts_salt(max_occ: int) -> int:
     )
 
 
+def _paa_group_pairs(spark: SparkSession, sf_dir: str):
+    """The PAA family's ONE pair producer (the ``_fuzzy_blocked_groups``
+    shape): ``(block, members, gpairs)`` where ``block(gid, n, b, b1,
+    pv, dv, nsq)`` is the twin-collapsed distinct-series table (gid =
+    min member user_id) behind a lazy lineage cut, ``members(gid,
+    user_id)`` the group→user expansion, and ``gpairs(ga, gb, n_a,
+    n_b, paa_lb2, dist2)`` the group pairs (ga < gb) with lb2 ≤ T² and
+    dist2 ≤ T². ``timeseries_paa_similarity`` fans gpairs out to member
+    pairs; ``timeseries_paa_groups`` adds counts and self-rows.
+
+    Collapse (r9/r10): identical series collapse to one group keyed on
+    two independent hashes of the dense array (8-byte xxhash64 +
+    16-byte md5) instead of the array itself, so the widest column
+    rides the exchange once per group as first(dv), never as the key —
+    deterministic because every member of a (hk, h128) group holds the
+    IDENTICAL array unless xxhash64 AND md5 collide on the same pair
+    simultaneously (the md5-collapse assumption the dedup family
+    already rests on). pv/nsq are pure functions of dv, so grouping is
+    value-identical to the oracles' GROUP BY dv, and they fold once
+    per DISTINCT series after the collapse.
+
+    Blocking (r11): the ``timeseries_paa_topk`` 2-D GRID on the first
+    two PAA segments (±1 cell each, 9 probe cells; the 1-D band when
+    the corpus has a single segment). Sound by the GEMINI theorem:
+    lb2 ≤ T² forces |Δpaa_s| ≤ T/√5 ≤ W in EVERY segment, so the
+    emitted {lb2 ≤ T² ∧ dist2 ≤ T²} relation is blocking-INDEPENDENT
+    and the 1-D-banded DuckDB oracles are unchanged (a pair meets in
+    exactly one (o0, o1) offset combination, so the grid never
+    duplicates candidates)."""
+    max_d, vec = _paa_vec(spark, sf_dir)
+    n_seg = max_d // 5 + 1
+    vh = vec.select(
+        "user_id",
+        "dv",
+        F.xxhash64("dv").alias("hk"),
+        F.md5(F.col("dv").cast("string").cast("binary")).alias("h128"),
+    )
+    grp = (
+        vh.groupBy("hk", "h128")
+        .agg(
+            F.min("user_id").alias("gid"),
+            F.count("*").alias("n"),
+            F.first("dv").alias("dv"),
+        )
+        .select(
+            "hk",
+            "h128",
+            "gid",
+            "n",
+            "dv",
+            F.expr(
+                f"transform(sequence(0, {n_seg - 1}),"
+                " s -> aggregate(slice(dv, s * 5 + 1, 5), cast(0 as double),"
+                " (acc, x) -> acc + x) / 5)"
+            ).alias("pv"),
+            F.expr(
+                "aggregate(dv, cast(0 as double), (acc, x) -> acc + x * x)"
+            ).alias("nsq"),
+        )
+    )
+    members = vh.select("hk", "h128", "user_id").join(
+        grp.select("hk", "h128", "gid"), ["hk", "h128"]
+    ).select("gid", "user_id")
+    two_d = n_seg >= 2
+    # _spread (r11): checkpoint the rep table at default parallelism,
+    # not at the 1 partition AQE coalesces its collapse to — every
+    # downstream stage (cell/salt explode, candidate join, distance
+    # folds, re-attach) inherits the width (measured receipt in
+    # _spread's docstring). The lineage cut shares one materialization
+    # between the occupancy probe, both join sides, the dv re-attach
+    # and the self-rows (lazy: the occupancy .first() below is the
+    # materializing action).
+    block = truncate_lineage(
+        _spread(grp, "gid").select(
+            "gid",
+            "n",
+            F.floor(F.element_at("pv", 1) / _TS_W).cast("bigint").alias("b"),
+            (
+                F.floor(F.element_at("pv", 2) / _TS_W).cast("bigint")
+                if two_d
+                else F.lit(0).cast("bigint")
+            ).alias("b1"),
+            "pv",
+            "dv",
+            "nsq",
+        ),
+        eager=False,
+    )
+    # SALTED grid self-join (r6, found by the scale probe): white-noise
+    # seg-0 means concentrate ~all users into one cell, and AQE's
+    # skew-join never fires because it detects input-byte skew, not
+    # join-EXPLOSION skew (the hot partition's input is a few KB; its
+    # output is |cell|^2 pairs). The salt splits the y side by
+    # gid-hash into `salt` buckets and replicates the x side across
+    # them: identical pair set, enumeration spread over `salt` tasks,
+    # fan-out DERIVED from measured hot-cell occupancy (_ts_salt).
+    max_occ = (
+        block.groupBy("b", "b1").count().agg(F.max("count")).first()[0]
+        or 0
+    )
+    salt = _ts_salt(max_occ)
+    # NARROW fan-out (r11): the candidate join carries gid/n/cells/pv/
+    # nsq only — the wide dv array does not ride the (9 cells × salt)-
+    # fold x-side explode; it is re-attached to the lb2 SURVIVORS
+    # (bounded by near-pair mass) through two id-keyed joins against
+    # the checkpointed block.
+    narrow = block.drop("dv")
+    x = narrow.withColumn(
+        "b", F.explode(F.array(F.col("b") - 1, F.col("b"), F.col("b") + 1))
+    )
+    if two_d:
+        x = x.withColumn(
+            "b1",
+            F.explode(
+                F.array(F.col("b1") - 1, F.col("b1"), F.col("b1") + 1)
+            ),
+        )
+    x = x.withColumn(
+        "salt",
+        F.explode(F.array(*[F.lit(s) for s in range(salt)])),
+    ).alias("x")
+    y = narrow.withColumn(
+        "salt", F.pmod(F.xxhash64("gid"), F.lit(salt)).cast("int")
+    ).alias("y")
+    # UNROLLED lb2 (r11): a flat codegen expression instead of the
+    # lambda fold (_paa_unrolled_lb2 docstring), evaluated INSIDE the
+    # join condition so a candidate past the bound never materializes
+    # a row.
+    lb2 = _paa_unrolled_lb2("x.pv", "y.pv", n_seg)
+    surv = x.join(
+        y,
+        (F.col("y.b") == F.col("x.b"))
+        & (F.col("y.b1") == F.col("x.b1"))
+        & (F.col("y.salt") == F.col("x.salt"))
+        & (F.col("y.gid") > F.col("x.gid"))
+        & (lb2 <= F.lit(_TS_T2)),
+    ).select(
+        F.col("x.gid").alias("ga"),
+        F.col("y.gid").alias("gb"),
+        F.col("x.n").alias("n_a"),
+        F.col("y.n").alias("n_b"),
+        lb2.alias("paa_lb2"),
+        F.col("x.nsq").alias("na"),
+        F.col("y.nsq").alias("nb"),
+    )
+    # dist2 stays a lambda FOLD on purpose: unrolling the 30-term dot
+    # was MEASURED SLOWER (11.0 s vs 7.2 s inline; the generated
+    # method outgrows the JIT's huge-method limit and the whole stage
+    # drops to the bytecode interpreter), while the 6-term lb2 unroll
+    # stays compilable. The r11 receipt's winning split: small bound
+    # unrolled, big dot folded, fold volume capped by the reattach.
+    cross = F.expr(
+        "aggregate(zip_with(dva, dvb, (p, q) -> p * q),"
+        " cast(0 as double), (acc, v) -> acc + v)"
+    )
+    dva_t = block.select(F.col("gid").alias("ga"), F.col("dv").alias("dva"))
+    dvb_t = block.select(F.col("gid").alias("gb"), F.col("dv").alias("dvb"))
+    gpairs = (
+        surv.join(dva_t, "ga")
+        .join(dvb_t, "gb")
+        .select(
+            "ga",
+            "gb",
+            "n_a",
+            "n_b",
+            "paa_lb2",
+            _single_eval(
+                F.col("na") + F.col("nb") - 2 * cross,
+                lambda x: x <= F.lit(_TS_T2),
+            ).alias("dist2"),
+        )
+    )
+    return block, members, gpairs
+
+
 @register(
     "timeseries_paa_similarity",
     oracle=f"""
@@ -7557,148 +7477,15 @@ def timeseries_paa_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical plan prunes most pairs, which is the paper's
     result. The salted band join (see inline note) is the r6 fix for
     the hot-band skew the scale probe caught."""
-    max_d, vec = _paa_vec(spark, sf_dir)
-    n_seg = max_d // 5 + 1
     # r9 (VERDICT r8 item 2's computation half): the emitted member-pair
     # relation stays the contract (`timeseries_paa_groups` is the
-    # bounded-output alternative), but every array fold now runs once
-    # per DISTINCT-series pair — identical series collapse to one
-    # representative, the salted band join and both distance folds run
-    # over representatives, and surviving group pairs fan back out to
-    # member pairs with two id-only joins; within-group twin pairs emit
-    # (0.0, 0.0) exactly, the value the naive subtraction of identical
-    # folds produces. r10 (VERDICT r9 item 4): the collapse keys and
-    # the members join run on two independent hashes of the array
-    # (8-byte xxhash64 + 16-byte md5) instead of the array itself —
-    # see timeseries_paa_groups for the collision argument — and
-    # pv/nsq fold once per DISTINCT series after the collapse.
-    vh = vec.select(
-        "user_id",
-        "dv",
-        F.xxhash64("dv").alias("hk"),
-        F.md5(F.col("dv").cast("string").cast("binary")).alias("h128"),
-    )
-    grp = (
-        vh.groupBy("hk", "h128")
-        .agg(F.min("user_id").alias("gid"), F.first("dv").alias("dv"))
-        .select(
-            "hk",
-            "h128",
-            "gid",
-            "dv",
-            F.expr(
-                f"transform(sequence(0, {n_seg - 1}),"
-                " s -> aggregate(slice(dv, s * 5 + 1, 5), cast(0 as double),"
-                " (acc, x) -> acc + x) / 5)"
-            ).alias("pv"),
-            F.expr(
-                "aggregate(dv, cast(0 as double), (acc, x) -> acc + x * x)"
-            ).alias("nsq"),
-        )
-    )
-    members = vh.select("hk", "h128", "user_id").join(
-        grp.select("hk", "h128", "gid"), ["hk", "h128"]
-    ).select("gid", "user_id")
-    # SALTED band self-join (r6, found by the scale probe): white-noise
-    # seg-0 means concentrate ~all users into band 0, so the plain
-    # equi-join on b put every candidate pair into ONE sort-merge task —
-    # and AQE's skew-join never fires because it detects input-byte
-    # skew, not join-EXPLOSION skew (the hot partition's input is a few
-    # KB; its output is |band|^2 pairs). The salt splits the y side by
-    # gid-hash into `salt` buckets and replicates the (already
-    # band-exploded, tiny) x side across them: identical pair set,
-    # |band|^2 enumeration spread over `salt` parallel tasks. The
-    # fan-out is DERIVED from measured hot-band occupancy (_ts_salt,
-    # VERDICT r8 item 3); the lineage cut shares one materialization of
-    # the band table between the occupancy probe and both join sides
-    # (lazy: the occupancy .first() below is the materializing action).
-    # r11: the timeseries_paa_groups rewrite ported to the pair gate —
-    # 2-D grid (sound and oracle-invariant: lb2 ≤ T² forces
-    # per-segment proximity, so the emitted {lb2 ≤ T² ∧ dist2 ≤ T²}
-    # relation is blocking-independent), NARROW candidate join (dv off
-    # the cells × salt fan-out, re-attached to lb2 survivors by id),
-    # and the 6-term lb2 unrolled into codegen inside the join
-    # condition. The 30-element dist2 dot stays a lambda fold —
-    # unrolling it drops the stage out of JIT (the groups gate's
-    # measured rejection).
-    two_d = n_seg >= 2
-    # _spread (r11): checkpoint the rep table at default parallelism,
-    # not at the 1 partition AQE coalesces its collapse to — every
-    # downstream stage (cell/salt explode, candidate join, distance
-    # folds, ranking window, re-attach) inherits the width (measured
-    # receipt in _spread's docstring).
-    block = truncate_lineage(
-        _spread(grp, "gid").select(
-            "gid",
-            F.floor(F.element_at("pv", 1) / _TS_W).cast("bigint").alias("b"),
-            (
-                F.floor(F.element_at("pv", 2) / _TS_W).cast("bigint")
-                if two_d
-                else F.lit(0).cast("bigint")
-            ).alias("b1"),
-            "pv",
-            "dv",
-            "nsq",
-        ),
-        eager=False,
-    )
-    max_occ = (
-        block.groupBy("b", "b1").count().agg(F.max("count")).first()[0]
-        or 0
-    )
-    salt = _ts_salt(max_occ)
-    narrow = block.drop("dv")
-    x = narrow.withColumn(
-        "b", F.explode(F.array(F.col("b") - 1, F.col("b"), F.col("b") + 1))
-    )
-    if two_d:
-        x = x.withColumn(
-            "b1",
-            F.explode(
-                F.array(F.col("b1") - 1, F.col("b1"), F.col("b1") + 1)
-            ),
-        )
-    x = x.withColumn(
-        "salt",
-        F.explode(F.array(*[F.lit(s) for s in range(salt)])),
-    ).alias("x")
-    y = narrow.withColumn(
-        "salt", F.pmod(F.xxhash64("gid"), F.lit(salt)).cast("int")
-    ).alias("y")
-    lb2 = _paa_unrolled_lb2("x.pv", "y.pv", n_seg)
-    surv = x.join(
-        y,
-        (F.col("y.b") == F.col("x.b"))
-        & (F.col("y.b1") == F.col("x.b1"))
-        & (F.col("y.salt") == F.col("x.salt"))
-        & (F.col("y.gid") > F.col("x.gid"))
-        & (lb2 <= F.lit(_TS_T2)),
-    ).select(
-        F.col("x.gid").alias("ga"),
-        F.col("y.gid").alias("gb"),
-        lb2.alias("paa_lb2"),
-        F.col("x.nsq").alias("na"),
-        F.col("y.nsq").alias("nb"),
-    )
-    cross = F.expr(
-        "aggregate(zip_with(dva, dvb, (p, q) -> p * q),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    dva_t = block.select(F.col("gid").alias("ga"), F.col("dv").alias("dva"))
-    dvb_t = block.select(F.col("gid").alias("gb"), F.col("dv").alias("dvb"))
-    gpairs = (
-        surv.join(dva_t, "ga")
-        .join(dvb_t, "gb")
-        .select(
-            "ga",
-            "gb",
-            "paa_lb2",
-            _single_eval(
-                F.col("na") + F.col("nb") - 2 * cross,
-                lambda x: x <= F.lit(_TS_T2),
-            ).alias("dist2"),
-        )
-    )
+    # bounded-output alternative), but every array fold runs once per
+    # DISTINCT-series pair — the salted grid join and both distance
+    # folds run over representatives (_paa_group_pairs), and surviving
+    # group pairs fan back out to member pairs with two id-only joins;
+    # within-group twin pairs emit (0.0, 0.0) exactly, the value the
+    # naive subtraction of identical folds produces.
+    _, members, gpairs = _paa_group_pairs(spark, sf_dir)
     ma = members.select(F.col("gid").alias("ga"), F.col("user_id").alias("xa"))
     mb = members.select(F.col("gid").alias("gb"), F.col("user_id").alias("xb"))
     crossp = (
@@ -7811,186 +7598,34 @@ def timeseries_paa_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     output grows ~K² BY CONTRACT (true near-dup mass is itself
     quadratic — SCALING_PROBE r8's honesty note); this relation is
     invariant, and Σ n_member_pairs reproduces the pair gate's row
-    count exactly (pinned in tests/test_ext_queries.py), so expansion
-    to member pairs remains the consumer's choice instead of the
-    emitter's obligation.
+    count exactly (pinned in tests/test_group_contracts.py), so
+    expansion to member pairs remains the consumer's choice instead of
+    the emitter's obligation.
 
-    Scale: the collapse is one groupBy keyed on two independent hashes
-    of the dense value array (8-byte xxhash64 + 16-byte md5, r10 —
-    VERDICT r9 item 4: the array itself rides the exchange once per
-    group as first(dv), never as the key), so exact-twin mass
-    collapses before any pair math; the salted ±1 grid join
-    (occupancy-derived fan-out, ``_ts_salt``) touches one row per
-    DISTINCT series; every distance is a row-local array fold.
-
-    r11 (VERDICT r10 item 2 — the phase receipt showed the candidate
-    join + lb2 folds at ~6.6 s of the 8.5 s warm gate, every other
-    phase < 0.5 s): blocking upgrades from the pair gate's 1-D band to
-    the ``timeseries_paa_topk`` 2-D GRID on the first two PAA segments
-    (±1 cell each, 9 probe cells), plus a SCALAR segment-3 prefilter
-    in the join condition (one double compare discharges a candidate
-    before the 6-element lb2 fold). Both are sound by the same
-    theorem: lb2 ≤ T² forces |Δpaa_s| ≤ T/√5 ≤ W in EVERY segment, so
-    the emitted relation — {{lb2 ≤ T² ∧ dist2 ≤ T²}} — is
-    blocking-INDEPENDENT and the 1-D-banded DuckDB oracle is unchanged
-    (a pair still meets in exactly one (o0,o1) offset combination, so
-    the grid never duplicates candidates). The extra dimensions fall
-    back to the 1-D band when the corpus has fewer than 2 (grid) or 3
-    (prefilter) segments."""
-    max_d, vec = _paa_vec(spark, sf_dir)
-    n_seg = max_d // 5 + 1
-    # r10 (VERDICT r9 item 4): the collapse's shuffle KEY shrinks from
-    # the full dense array (~8·days bytes — the widest column in the
-    # table riding the exchange as the key) to two independent hashes
-    # of it (8-byte xxhash64 + 16-byte md5 ≈ 40 bytes); the array
-    # itself is carried once per group as first(dv) — deterministic
-    # because every member of a (hk, h128) group holds the IDENTICAL
-    # array unless xxhash64 AND md5 collide on the same pair
-    # simultaneously (the md5-collapse assumption the dedup family
-    # already rests on). pv/nsq are pure functions of dv, so grouping
-    # is value-identical to the oracle's GROUP BY dv — and computing
-    # them AFTER the collapse folds each distinct series once instead
-    # of once per twin member.
-    grp = (
-        vec.groupBy(
-            F.xxhash64("dv").alias("hk"),
-            F.md5(F.col("dv").cast("string").cast("binary")).alias("h128"),
-        )
-        .agg(
-            F.min("user_id").alias("gid"),
-            F.count("*").alias("n"),
-            F.first("dv").alias("dv"),
-        )
-        .select(
-            "gid",
-            "n",
-            "dv",
-            F.expr(
-                f"transform(sequence(0, {n_seg - 1}),"
-                " s -> aggregate(slice(dv, s * 5 + 1, 5), cast(0 as double),"
-                " (acc, x) -> acc + x) / 5)"
-            ).alias("pv"),
-            F.expr(
-                "aggregate(dv, cast(0 as double), (acc, x) -> acc + x * x)"
-            ).alias("nsq"),
-        )
-    )
-    two_d = n_seg >= 2
-    # _spread (r11): checkpoint the rep table at default parallelism,
-    # not at the 1 partition AQE coalesces its collapse to — every
-    # downstream stage (cell/salt explode, candidate join, distance
-    # folds, ranking window, re-attach) inherits the width (measured
-    # receipt in _spread's docstring).
-    block = truncate_lineage(
-        _spread(grp, "gid").select(
-            "gid",
-            "n",
-            F.floor(F.element_at("pv", 1) / _TS_W).cast("bigint").alias("b"),
-            (
-                F.floor(F.element_at("pv", 2) / _TS_W).cast("bigint")
-                if two_d
-                else F.lit(0).cast("bigint")
-            ).alias("b1"),
-            "pv",
-            "dv",
-            "nsq",
-        ),
-        eager=False,
-    )
-    max_occ = (
-        block.groupBy("b", "b1").count().agg(F.max("count")).first()[0]
-        or 0
-    )
-    salt = _ts_salt(max_occ)
-    # NARROW fan-out (r11, the phase receipt's second finding): the
-    # candidate join carries gid/n/cells/pv/nsq only — the wide dv
-    # array no longer rides the (9 cells × salt)-fold x-side explode;
-    # it is re-attached to the lb2 SURVIVORS (bounded by near-pair
-    # mass) through two id-keyed joins against the checkpointed block.
-    narrow = block.drop("dv")
-    x = narrow.withColumn(
-        "b", F.explode(F.array(F.col("b") - 1, F.col("b"), F.col("b") + 1))
-    )
-    if two_d:
-        x = x.withColumn(
-            "b1",
-            F.explode(
-                F.array(F.col("b1") - 1, F.col("b1"), F.col("b1") + 1)
-            ),
-        )
-    x = x.withColumn(
-        "salt",
-        F.explode(F.array(*[F.lit(s) for s in range(salt)])),
-    ).alias("x")
-    y = narrow.withColumn(
-        "salt", F.pmod(F.xxhash64("gid"), F.lit(salt)).cast("int")
-    ).alias("y")
-    # UNROLLED lb2 (r11, the phase receipt's first finding): a flat
-    # codegen expression instead of the lambda fold (_paa_unrolled_lb2
-    # docstring), evaluated INSIDE the join condition so a candidate
-    # past the bound never materializes a row.
-    lb2 = _paa_unrolled_lb2("x.pv", "y.pv", n_seg)
-    join_cond = (
-        (F.col("y.b") == F.col("x.b"))
-        & (F.col("y.b1") == F.col("x.b1"))
-        & (F.col("y.salt") == F.col("x.salt"))
-        & (F.col("y.gid") > F.col("x.gid"))
-        & (lb2 <= F.lit(_TS_T2))
-    )
-    surv = x.join(y, join_cond).select(
-        F.col("x.gid").alias("group_a"),
-        F.col("y.gid").alias("group_b"),
-        F.col("x.n").alias("n_a"),
-        F.col("y.n").alias("n_b"),
-        lb2.alias("paa_lb2"),
-        F.col("x.nsq").alias("na"),
-        F.col("y.nsq").alias("nb"),
-    )
-    # dist2 stays a lambda FOLD on purpose: unrolling the 30-term dot
-    # was MEASURED SLOWER (11.0 s vs 7.2 s inline; the generated
-    # method outgrows the JIT's huge-method limit and the whole stage
-    # drops to the bytecode interpreter), while the 6-term lb2 unroll
-    # stays compilable. The r11 receipt's winning split: small bound
-    # unrolled, big dot folded, fold volume capped by the reattach.
-    cross_term = F.expr(
-        "aggregate(zip_with(dva, dvb, (p, q) -> p * q),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    dva_t = block.select(F.col("gid").alias("group_a"), F.col("dv").alias("dva"))
-    dvb_t = block.select(F.col("gid").alias("group_b"), F.col("dv").alias("dvb"))
-    crossp = (
-        surv.join(dva_t, "group_a")
-        .join(dvb_t, "group_b")
-        .select(
-            "group_a",
-            "group_b",
-            "n_a",
-            "n_b",
-            "paa_lb2",
-            _single_eval(
-                F.col("na") + F.col("nb") - 2 * cross_term,
-                lambda x: x <= F.lit(_TS_T2),
-            ).alias("dist2"),
-            (F.col("n_a") * F.col("n_b")).cast("bigint").alias(
-                "n_member_pairs"
-            ),
-        )
+    Scale: the collapse, the salted ±1 grid join (occupancy-derived
+    fan-out, ``_ts_salt``) and both distance folds are
+    ``_paa_group_pairs``' — one row per DISTINCT series, every
+    distance a row-local array fold; the self-rows are arithmetic on
+    group sizes (``neardup.group_pair_rows``). r11 (VERDICT r10 item 2
+    — the phase receipt showed the candidate join + lb2 folds at
+    ~6.6 s of the 8.5 s warm gate, every other phase < 0.5 s): the
+    2-D grid, the narrow join and the unrolled lb2 in the join
+    condition are that producer's."""
+    block, _, gpairs = _paa_group_pairs(spark, sf_dir)
+    crossp = gpairs.select(
+        F.col("ga").alias("group_a"),
+        F.col("gb").alias("group_b"),
+        "n_a",
+        "n_b",
+        "paa_lb2",
+        "dist2",
     )
     # self-rows come from the CHECKPOINTED block (it carries gid and
-    # n), not from grp — reading grp here would recompute the whole
-    # events→daily→vec→feat lineage a second time just to count twins
-    selfp = block.filter(F.col("n") > 1).select(
-        F.col("gid").alias("group_a"),
-        F.col("gid").alias("group_b"),
-        F.col("n").alias("n_a"),
-        F.col("n").alias("n_b"),
-        F.lit(0.0).alias("paa_lb2"),
-        F.lit(0.0).alias("dist2"),
-        F.expr("CAST((n * (n - 1)) DIV 2 AS BIGINT)").alias(
-            "n_member_pairs"
-        ),
+    # n) — reading the collapse itself would recompute the whole
+    # events→daily→vec lineage a second time just to count twins
+    return group_pair_rows(
+        crossp, block, {"paa_lb2": F.lit(0.0), "dist2": F.lit(0.0)}
     )
-    return crossp.unionAll(selfp)
 
 
 @register(
@@ -8072,12 +7707,9 @@ def timeseries_paa_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     join over REPRESENTATIVES only, and expands per-user answers from
     (a) up to 3 same-group twin-mates at exactly dist²=0.0 (identical
     arrays fold to an identical nsq, so the naive subtraction is IEEE
-    +0.0) and (b) the members of the group's top-3 neighbor groups —
-    sufficiency: every candidate ranks by (dist², id); any group
-    holding one of a user's global top-3 cross-group neighbors must
-    itself be among the top-3 groups by (dist², min member id),
-    because each lexicographically-earlier group contributes at least
-    one strictly-earlier candidate. Exact duplicates are the dominant
+    +0.0) and (b) the members of the group's top-3 neighbor groups,
+    ranked by (dist², id) — the sufficiency argument is
+    ``neardup.topk_from_group_pairs``'. Exact duplicates are the dominant
     twin mass in practice (all-zero inactive users, default
     patterns) and the probe's shared-value replication is 100% exact
     twins: measured overlap alpha fell 1.94 (naive enumeration) →
@@ -8096,7 +7728,7 @@ def timeseries_paa_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # twin-collapse: rank users within identical-series groups. r10
     # (VERDICT r9 item 4): the collapse windows partition on two
     # independent hashes of the array (xxhash64 + md5 — see
-    # timeseries_paa_groups for the collision argument) so the wide
+    # _paa_group_pairs for the collision argument) so the wide
     # series rides the exchange as a VALUE, never as the key; the
     # pv/nsq folds run once per REPRESENTATIVE (projection after the
     # grn filter), not once per member.
@@ -8122,10 +7754,6 @@ def timeseries_paa_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "aggregate(dv, cast(0 as double), (acc, x) -> acc + x * x)"
         ).alias("nsq"),
-    )
-    # the 4 smallest member ids per group cover any member's 3 mates
-    m4 = ranked.filter(F.col("grn") <= 4).select(
-        "gid", F.col("user_id").alias("member_id")
     )
     # grid fan-out salt DERIVED from measured hot-cell occupancy over
     # REPRESENTATIVES (VERDICT r8 item 3 — the pinned 32 made the fixed
@@ -8174,7 +7802,7 @@ def timeseries_paa_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).alias("y")
     # the 30-element dot stays a lambda fold — unrolling it drops the
     # stage out of JIT compilation (measured slower; see the
-    # timeseries_paa_groups r11 note)
+    # _paa_group_pairs r11 note)
     cross = F.expr(
         "aggregate(zip_with(x.dv, y.dv, (p, q) -> p * q),"
         " cast(0 as double), (acc, v) -> acc + v)"
@@ -8196,67 +7824,14 @@ def timeseries_paa_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("y.gid").alias("h"),
         (F.col("x.nsq") + F.col("y.nsq") - 2 * cross).alias("dist2"),
     )
-    # both orientations via ONE explode, not a self-union: union
-    # branches are separate subtrees to Catalyst, so
-    # undirected.unionAll(undirected.select(swap)) re-runs the grid
-    # join and every 30-element fold per branch — the same total fold
-    # count the `<` join was adopted to halve (r10; the
-    # dedup_simhash_topk trick, measured there at 58 s vs 34 s)
-    gpairs = undirected.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("g"), F.col("h"), F.col("dist2")),
-                F.struct(
-                    F.col("h").alias("g"),
-                    F.col("g").alias("h"),
-                    F.col("dist2"),
-                ),
-            )
-        ).alias("s")
-    ).select("s.*")
-    wtop = Window.partitionBy("g").orderBy("dist2", "h")
-    topg = (
-        gpairs.withColumn("grk", F.row_number().over(wtop))
-        .filter(F.col("grk") <= 3)
-        .select("g", "h", "dist2")
-    )
-    users = ranked.select("user_id", "gid")
-    mates = (
-        users.join(m4, "gid")
-        .filter(F.col("member_id") != F.col("user_id"))
-        .select(
-            "user_id",
-            F.col("member_id").alias("neighbor_id"),
-            F.lit(0.0).alias("dist2"),
-        )
-    )
-    # each neighbor group's 3 smallest member ids cover the global top-3
-    h3 = (
-        m4.withColumn(
-            "mrn",
-            F.row_number().over(
-                Window.partitionBy("gid").orderBy("member_id")
-            ),
-        )
-        .filter(F.col("mrn") <= 3)
-        .select(F.col("gid").alias("h"), "member_id")
-    )
-    cross_cand = (
-        users.join(topg, users["gid"] == topg["g"])
-        .join(h3, "h")
-        .select(
-            "user_id",
-            F.col("member_id").alias("neighbor_id"),
-            "dist2",
-        )
-    )
-    w = Window.partitionBy("user_id").orderBy("dist2", "neighbor_id")
-    return (
-        mates.unionAll(cross_cand)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("user_id", "neighbor_id", "dist2", "rk")
-    )
+    return topk_from_group_pairs(
+        symmetrize(undirected, "g", "h", "dist2"),
+        ranked,
+        "user_id",
+        "dist2",
+        desc=False,
+        mate_score=F.lit(0.0),
+    ).select("user_id", "neighbor_id", "dist2", "rk")
 
 
 @register(
@@ -9225,13 +8800,14 @@ def _fuzzy_blocked_groups(spark: SparkSession, sf_dir: str):
     """Shared group-level fuzzy pipeline: ``(g, members, gpairs)``
     where ``g(blk, head, gid, n, …probe cols)`` is the twin-collapsed
     distinct-content table (gid = min member doc_id), ``members(gid,
-    member_id)`` the group→doc expansion, and ``gpairs(ga, gb,
-    edit_dist)`` the refined distinct-content pairs (≤ 40, Myers
+    member_id)`` the group→doc expansion, and ``gpairs(ga, gb, n_a,
+    n_b, edit_dist)`` the refined distinct-content pairs (≤ 40, Myers
     kernel, single ArrowEvalPython site). ``dedup_fuzzy_levenshtein``
     fans gpairs out to member pairs (its emitted contract);
-    ``dedup_fuzzy_apply`` (r13) runs connected components directly on
-    this relation instead — the group graph is invariant under twin
-    replication, so CC never touches the ~K² member-pair mass."""
+    ``dedup_fuzzy_groups`` adds the self-rows; ``dedup_fuzzy_apply``
+    (r13) runs connected components directly on this relation — the
+    group graph is invariant under twin replication, so CC never
+    touches the ~K² member-pair mass."""
     d = t(spark, sf_dir, "documents").select(
         "doc_id",
         F.split("text", " ").getItem(0).alias("blk"),
@@ -9322,6 +8898,8 @@ def _fuzzy_blocked_groups(spark: SparkSession, sf_dir: str):
         .select(
             F.col("a.gid").alias("ga"),
             F.col("b.gid").alias("gb"),
+            F.col("a.n").alias("n_a"),
+            F.col("b.n").alias("n_b"),
             _single_eval(
                 lev(F.col("a.head"), F.col("b.head")),
                 lambda x: x <= 40,
@@ -9442,64 +9020,26 @@ def dedup_fuzzy_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale design (r13 — VERDICT r12 item 2): connected components run
     on the TWIN-COLLAPSED GROUP pair relation, never the ~K²
-    member-pair expansion. Equivalence: contracting each identical-
-    content group (every member within edit distance 0 of the others,
-    hence pairwise near) preserves connectivity exactly, and since a
-    group's gid IS its minimum member doc_id, the group component's
-    min gid equals the doc component's min doc_id — so expanding group
-    labels through the membership relation reproduces the doc-level
-    labeling verbatim (pinned against doc-level CC in
-    tests/test_ext_dedup.py). Groups with ≥ 2 members but no near
-    group-pair enter as self-edges (their twins alone form a
-    component). The group pipeline executes ONCE (CC lineage-cuts its
-    input before the size probe, r13 graph.py contract); the member
-    expansion is one id-only join; applying the labels is one
-    size-gated-broadcast left join + row-local filter — past the gate
-    (labels are O(corpus) under real duplication) the hint drops to a
-    plain key shuffle join. The ORACLE replays the naive pair
+    member-pair expansion (``neardup.group_labels``; every member of
+    a group is within edit distance 0 of the others, hence pairwise
+    near, so every group with ≥ 2 members enters as a self-edge).
+    The group pipeline executes ONCE (CC lineage-cuts its input
+    before the size probe, r13 graph.py contract); the member
+    expansion is one id-only join; applying the labels is
+    ``neardup.apply_keep_min``. The ORACLE replays the naive pair
     enumeration + a recursive-CTE closure, so the gate certifies
     blocking, kernel, CC, and keep rule together."""
-    from olr_cdc_oracle_no_dbz_spark.graph import (
-        connected_components,
-        size_gated_broadcast,
-    )
-
     g, members, gpairs = _fuzzy_blocked_groups(spark, sf_dir)
-    gedges = (
-        gpairs.filter(F.col("edit_dist") <= 20)
-        .selectExpr("ga AS s", "gb AS d")
-        .unionAll(
-            g.filter(F.col("n") >= 2).selectExpr("gid AS s", "gid AS d")
-        )
-    )
-    glabels = connected_components(
-        gedges,
-        algorithm=str(
-            spark.conf.get("spark.graft.cc.algorithm", "auto")
+    glabels = group_labels(
+        gpairs.filter(F.col("edit_dist") <= 20).selectExpr(
+            "ga AS s", "gb AS d"
         ),
+        g.filter(F.col("n") >= 2).select("gid"),
     )
-    n_groups_labeled = getattr(glabels, "_graft_n_rows", None)
-    labels = members.join(
-        size_gated_broadcast(
-            glabels.withColumnRenamed("doc_id", "gid"),
-            n_rows=n_groups_labeled,
-        ),
-        "gid",
-    ).select(F.col("member_id").alias("doc_id"), "cluster_id")
-    d = t(spark, sf_dir, "documents")
-    joined = d.join(size_gated_broadcast(labels), "doc_id", "left")
-    return joined.filter(
-        F.col("cluster_id").isNull()
-        | (F.col("cluster_id") == F.col("doc_id"))
-    ).select(
-        "doc_id",
-        "lang",
-        "source",
-        "n_chars",
-        F.when(F.col("cluster_id").isNotNull(), "fuzzy_keeper")
-        .otherwise("unique")
-        .alias("kept_reason"),
+    labels = members.join(glabels, "gid").select(
+        F.col("member_id").alias("doc_id"), "cluster_id"
     )
+    return apply_keep_min(spark, sf_dir, labels, "fuzzy_keeper")
 
 
 @register(
@@ -9546,18 +9086,12 @@ def dedup_fuzzy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     twins are indistinguishable to every comparison — the block join
     runs over REPRESENTATIVES only, and per-doc answers expand from
     (a) up to 3 same-group twin-mates at exactly distance 0 (identical
-    heads) and (b) the members of the group's top-3 neighbor groups.
-    Sufficiency: candidates rank by (edit_dist, id); any group holding
-    one of a doc's global top-3 cross-group neighbors must itself be
-    among the top-3 groups by (edit_dist, min member id), because each
-    lexicographically-earlier group contributes at least one strictly-
-    earlier candidate; within-group mates need only the 4 smallest ids
-    (3 excluding self), and each neighbor group only its 3 smallest.
-    Cross-group distance within a block is ≥ 1 (same block + different
-    group ⇒ different head), so mates and cross candidates interleave
-    correctly in the final (edit_dist, neighbor_id) merge window. The
-    ORACLE stays the naive enumerate-then-rank — the gate certifies
-    collapse+expand == naive row-for-row at both SFs.
+    heads) and (b) the members of the group's top-3 neighbor groups,
+    ranked by (edit_dist, id) — the sufficiency argument is
+    ``neardup.topk_from_group_pairs``'. Cross-group distance within a
+    block is ≥ 1 (same block + different group ⇒ different head), so
+    mates and cross candidates interleave correctly in the final
+    (edit_dist, neighbor_id) merge window.
 
     Scale: group machinery is two windows keyed on (blk, head); the
     O(80²) Levenshtein DP runs once per DISTINCT-content pair instead
@@ -9581,10 +9115,6 @@ def dedup_fuzzy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     reps = ranked.filter(F.col("grn") == 1).select(
         "gid", "blk", "head", "gn"
-    )
-    # the 4 smallest member ids per group cover any member's 3 mates
-    m4 = ranked.filter(F.col("grn") <= 4).select(
-        "gid", F.col("doc_id").alias("member_id")
     )
     n_part = spark.sparkContext.defaultParallelism
     # r11: salt-split hot blocks across tasks (_salted_block_sides)
@@ -9625,70 +9155,19 @@ def dedup_fuzzy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r11: Arrow-batched Myers kernel (_lev_arrow), 2.3× the builtin
         _lev_arrow()(F.col("a.head"), F.col("b.head")).alias("edit_dist"),
     )
-    # both orientations via ONE explode (r10): a self-union re-runs the
-    # block join and the O(80²) DP once per branch — the same defect
-    # the `<` join was adopted to remove (dedup_simhash_topk finding)
-    gpairs = undirected.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("g"),
-                    F.col("h"),
-                    F.col("edit_dist"),
-                    F.col("gna").alias("gn"),
-                ),
-                F.struct(
-                    F.col("h").alias("g"),
-                    F.col("g").alias("h"),
-                    F.col("edit_dist"),
-                    F.col("gnb").alias("gn"),
-                ),
-            )
-        ).alias("s")
-    ).select("s.*").filter(F.col("gn") <= 3)
-    wtop = Window.partitionBy("g").orderBy("edit_dist", "h")
-    topg = (
-        gpairs.withColumn("grk", F.row_number().over(wtop))
-        .filter(F.col("grk") <= 3)
-        .select("g", "h", "edit_dist")
-    )
-    docs = ranked.select("doc_id", "gid")
-    mates = (
-        docs.join(m4, "gid")
-        .filter(F.col("member_id") != F.col("doc_id"))
-        .select(
-            "doc_id",
-            F.col("member_id").alias("neighbor_id"),
-            F.lit(0).cast("bigint").alias("edit_dist"),
-        )
-    )
-    # each neighbor group's 3 smallest member ids cover the global top-3
-    h3 = (
-        m4.withColumn(
-            "mrn",
-            F.row_number().over(
-                Window.partitionBy("gid").orderBy("member_id")
-            ),
-        )
-        .filter(F.col("mrn") <= 3)
-        .select(F.col("gid").alias("h"), "member_id")
-    )
-    cross_cand = (
-        docs.join(topg, docs["gid"] == topg["g"])
-        .join(h3, "h")
-        .select(
-            "doc_id",
-            F.col("member_id").alias("neighbor_id"),
-            "edit_dist",
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy("edit_dist", "neighbor_id")
-    return (
-        mates.unionAll(cross_cand)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("doc_id", "neighbor_id", "edit_dist", "rk")
-    )
+    # each orientation keeps its own side's count: only groups with
+    # gn ≤ 3 rank cross-group neighbors (the mates-fill prune above)
+    gsym = symmetrize(
+        undirected, "g", "h", "edit_dist", ("gn", "gna", "gnb")
+    ).filter(F.col("gn") <= 3)
+    return topk_from_group_pairs(
+        gsym,
+        ranked,
+        "doc_id",
+        "edit_dist",
+        desc=False,
+        mate_score=F.lit(0).cast("bigint"),
+    ).select("doc_id", "neighbor_id", "edit_dist", "rk")
 
 
 @register(
@@ -9737,79 +9216,27 @@ def dedup_fuzzy_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot avoid) while THIS relation is invariant — the counts absorb
     the mass. Member-pair expansion stays available to the consumer
     (join members through the group ids; Σ n_member_pairs here equals
-    the pair gate's row count exactly — tests/test_ext_queries.py pins
-    that identity), so no information is lost, only repetition.
+    the pair gate's row count exactly — tests/test_group_contracts.py
+    pins that identity), so no information is lost, only repetition.
 
-    Scale: one (blk, head) groupBy; the block join touches one row per
-    distinct head; the O(80²) DP runs once per distinct-content pair.
+    Scale: the family's pair producer ``_fuzzy_blocked_groups`` — one
+    (blk, head) groupBy; the block join touches one row per distinct
+    head; the O(80²) DP runs once per distinct-content pair.
     This is the emit-at-scale answer for the whole fuzzy family — the
     bounded per-doc ranking is ``dedup_fuzzy_topk``."""
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.split("text", " ").getItem(0).alias("blk"),
-        F.substring("text", 1, 80).alias("head"),
-    )
-    # r14 (opt): lazy cut — g feeds the salt probe, both join sides,
-    # and the self-row/count joins (the _fuzzy_blocked_groups receipt)
-    g = truncate_lineage(
-        d.groupBy("blk", "head").agg(
-            F.min("doc_id").alias("gid"), F.count("*").alias("n")
-        ).select("blk", "head", "gid", "n", *_fuzzy_probe_cols()),
-        eager=False,
-    )
-    # r11: salt-split hot blocks across tasks (_salted_block_sides)
-    n_part = spark.sparkContext.defaultParallelism
-    salt, n_groups = _fuzzy_salt(g, "blk", "blkhead", sf_dir, n_part)
-    a, b, cond = _salted_block_sides(g, "blk", n_part, salt, n_groups)
-    # r10 (VERDICT r9 item 2): theorem lower bound gates the DP; the
-    # oracle keeps the naive WHERE, so the gate certifies the prune.
-    # r11 (VERDICT r10 item 1): bigram term in the bound (fires on the
-    # reorder-adversarial pairs the char-bag theorem misses) + the
-    # three-arg banded DP evaluated exactly ONCE per pair in a
-    # Generate node (explode of the ≥0-filtered singleton — the r10
-    # select-then-filter shape re-evaluated the DP in the pushed-down
-    # predicate, 2× the arithmetic; see dedup_fuzzy_levenshtein).
-    lb = _fuzzy_lb(
-        "a.hlen", "b.hlen", "a.pcnt", "b.pcnt", "a.bcnt", "b.bcnt"
-    )
-    # r11: Arrow-batched Myers kernel; threshold as a plain filter
-    # (see dedup_fuzzy_levenshtein's note)
-    lev = _lev_arrow()
-    crossp = (
-        a.join(b, cond)
-        .filter(lb <= 40)
-        .select(
-            F.col("a.gid").alias("group_a"),
-            F.col("b.gid").alias("group_b"),
-            F.col("a.n").alias("n_a"),
-            F.col("b.n").alias("n_b"),
-            _single_eval(
-                lev(F.col("a.head"), F.col("b.head")),
-                lambda x: x <= 40,
-            ).alias("edit_dist"),
-            (F.col("a.n") * F.col("b.n")).cast("bigint").alias(
-                "n_member_pairs"
-            ),
-        )
-    )
-    selfp = g.filter(F.col("n") > 1).select(
-        F.col("gid").alias("group_a"),
-        F.col("gid").alias("group_b"),
-        F.col("n").alias("n_a"),
-        F.col("n").alias("n_b"),
-        F.lit(0).cast("bigint").alias("edit_dist"),
-        F.expr("CAST((n * (n - 1)) DIV 2 AS BIGINT)").alias(
-            "n_member_pairs"
-        ),
-    )
-    return crossp.unionAll(selfp).select(
-        "group_a",
-        "group_b",
+    g, _, gpairs = _fuzzy_blocked_groups(spark, sf_dir)
+    crossp = gpairs.select(
+        F.col("ga").alias("group_a"),
+        F.col("gb").alias("group_b"),
         "n_a",
         "n_b",
         "edit_dist",
-        (F.col("edit_dist") <= 20).alias("is_near"),
-        "n_member_pairs",
+    )
+    return group_pair_rows(
+        crossp,
+        g,
+        {"edit_dist": F.lit(0).cast("bigint")},
+        flag=(F.col("edit_dist") <= 20).alias("is_near"),
     )
 
 
@@ -9934,9 +9361,6 @@ def dedup_fuzzy_multiblock(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("b.gid").alias("group_b"),
                 F.col("a.n").alias("n_a"),
                 F.col("b.n").alias("n_b"),
-                (F.col("a.n") * F.col("b.n")).cast("bigint").alias(
-                    "n_member_pairs"
-                ),
                 F.lit(via).alias("via"),
             )
         )
@@ -9952,9 +9376,7 @@ def dedup_fuzzy_multiblock(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         key_cands("b1", "first_word")
         .unionAll(key_cands("b2", "last_word"))
-        .groupBy(
-            "group_a", "group_b", "n_a", "n_b", "n_member_pairs",
-        )
+        .groupBy("group_a", "group_b", "n_a", "n_b")
         .agg(
             F.concat_ws(
                 ",", F.array_sort(F.collect_set("via"))
@@ -9984,29 +9406,14 @@ def dedup_fuzzy_multiblock(spark: SparkSession, sf_dir: str) -> DataFrame:
             lev(F.col("head_a"), F.col("head_b")),
             lambda x: x <= 40,
         ).alias("edit_dist"),
-        "n_member_pairs",
         "via",
     )
-    selfp = g.filter(F.col("n") > 1).select(
-        F.col("gid").alias("group_a"),
-        F.col("gid").alias("group_b"),
-        F.col("n").alias("n_a"),
-        F.col("n").alias("n_b"),
-        F.lit(0).cast("bigint").alias("edit_dist"),
-        F.expr("CAST((n * (n - 1)) DIV 2 AS BIGINT)").alias(
-            "n_member_pairs"
-        ),
-        F.lit("twin").alias("via"),
-    )
-    return crossp.unionAll(selfp).select(
-        "group_a",
-        "group_b",
-        "n_a",
-        "n_b",
-        "edit_dist",
-        (F.col("edit_dist") <= 20).alias("is_near"),
-        "n_member_pairs",
-        "via",
+    return group_pair_rows(
+        crossp,
+        g,
+        {"edit_dist": F.lit(0).cast("bigint")},
+        flag=(F.col("edit_dist") <= 20).alias("is_near"),
+        extra={"via": F.lit("twin")},
     )
 
 

@@ -4,16 +4,38 @@ plans/$SPARK_GRAFT_PLANS_ROUND/<gate>_<tag>.txt (round dir defaults to
 r15).
 
 Usage: python scripts/dump_plan_files.py <tag> gate1 gate2 ...
-(tag is 'before' or 'after'). Runs at sf0.1 (the bench SF) so derived
-widths/parameters match the bench plans.
+(tag is 'before' or 'after'). Plans are built over
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata). The bench's
+query_mix runs at sf0.01, so point SPARK_GRAFT_SF_DIR at the sf0.01
+testdata when the receipt must match the bench's derived
+widths/parameters.
+
+Expression ids (`name#<n>`), `plan_id=<n>` and `RDD[<n>]` are
+renumbered in order of first appearance, so two plans with the same
+structure write identical files and a before/after diff shows only
+real plan changes.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_ID = re.compile(r"(#|plan_id=|RDD\[)(\d+)")
+
+
+def normalize_ids(plan: str) -> str:
+    """Renumber each id family from 0 in order of first appearance."""
+    seen: dict[str, dict[str, int]] = {}
+
+    def sub(m: re.Match) -> str:
+        ids = seen.setdefault(m.group(1), {})
+        return m.group(1) + str(ids.setdefault(m.group(2), len(ids)))
+
+    return _ID.sub(sub, plan)
 
 
 def main() -> int:
@@ -33,8 +55,10 @@ def main() -> int:
     qs = queries()
     for name in names:
         df = qs[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
+        plan = normalize_ids(
+            df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
         )
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:

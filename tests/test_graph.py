@@ -189,19 +189,3 @@ def test_cc_driver_union_find_arrow_pull_handles_string_ids(spark):
         "doc-x": "doc-x",
     }
     assert dict(out.dtypes) == {"doc_id": "string", "cluster_id": "string"}
-
-
-def test_dedup_clusters_identical_under_star_contraction(spark):
-    """The conf switch must not change the registered query's output."""
-    from olr_cdc_oracle_no_dbz_spark.workload import queries
-
-    sf = "/root/testdata/sf0.001"
-    base = {tuple(r) for r in queries()["dedup_clusters"](spark, sf).collect()}
-    spark.conf.set("spark.graft.cc.algorithm", "starcontraction")
-    try:
-        star = {
-            tuple(r) for r in queries()["dedup_clusters"](spark, sf).collect()
-        }
-    finally:
-        spark.conf.set("spark.graft.cc.algorithm", "labelprop")
-    assert base == star and base

@@ -1,18 +1,22 @@
-"""Round-9 twin-collapse and group-pair contract pins.
+"""Twin-collapse and group-pair contract pins for the near-dup families.
 
-The differential gate proves collapse+expand == naive on the shipped
-corpora; these tests pin the same equivalence on an ADVERSARIAL
-twin-heavy corpus (every doc replicated K times — the overlap-probe
-shape that exposed the r8 near-quadratic enumeration) and the
-expansion identities that make the group-pair contract lossless:
+Every family's top-k and group-pair forms are derived from its one pair
+producer by the shared kit in ``workload/neardup.py``. The differential
+gate proves collapse+expand == naive on the shipped corpora; these tests
+pin the same equivalence on an ADVERSARIAL twin-heavy corpus (every doc
+and every event stream replicated K times — the overlap-probe shape that
+exposed the r8 near-quadratic enumeration) and the expansion identities
+that make the group-pair contract lossless:
 
 - Σ n_member_pairs over the group relation == the member-pair gate's
-  row count (dedup_fuzzy_groups vs dedup_fuzzy_levenshtein,
-  timeseries_paa_groups vs timeseries_paa_similarity).
+  row count (fuzzy, MinHash, embedding-cosine and PAA group gates
+  against their pair gates; SimHash's is_dup rows cover its pair gate).
 - Expanding dedup_fuzzy_groups through its group memberships
   reproduces the pair gate's exact (a_id, b_id, edit_dist) multiset.
-- dedup_fuzzy_topk / dedup_minhash_topk match their registered naive
-  DuckDB oracles row-for-row on the twin-heavy corpus.
+- The top-k gates (fuzzy, MinHash, PAA, embedding-cosine) and the
+  group gates match their registered naive DuckDB oracles row-for-row
+  on the twin-heavy corpora, and every top-k gate's output stays
+  bounded (≤ 3 rows per id, contiguous ranks, scores in range).
 """
 
 from __future__ import annotations
@@ -113,12 +117,11 @@ def _assert_matches_oracle(spark, q, sf_dir, name, tables=("documents", "events"
     )
 
 
-def test_fuzzy_topk_matches_naive_on_twin_heavy(spark, q, twin_sf):
-    _assert_matches_oracle(spark, q, twin_sf, "dedup_fuzzy_topk")
-
-
-def test_minhash_topk_matches_naive_on_twin_heavy(spark, q, twin_sf):
-    _assert_matches_oracle(spark, q, twin_sf, "dedup_minhash_topk")
+@pytest.mark.parametrize(
+    "name", ["dedup_fuzzy_topk", "dedup_minhash_topk", "timeseries_paa_topk"]
+)
+def test_topk_matches_naive_on_twin_heavy(spark, q, twin_sf, name):
+    _assert_matches_oracle(spark, q, twin_sf, name)
 
 
 def test_fuzzy_groups_matches_oracle_on_twin_heavy(spark, q, twin_sf):
@@ -171,15 +174,26 @@ def test_paa_groups_expansion_count_identity(spark, q):
     assert sum(r.n_member_pairs for r in groups) == pairs
 
 
-def test_minhash_topk_bounded_output(spark, q, twin_sf):
-    """≤3 rows per doc with contiguous ranks and jaccard in [0, 1] —
+#: top-k gate -> (id column, score column, score range)
+_TOPK_SHAPE = {
+    "dedup_minhash_topk": ("doc_id", "jaccard", 0.0, 1.0),
+    "dedup_fuzzy_topk": ("doc_id", "edit_dist", 0, 80),
+    "timeseries_paa_topk": ("user_id", "dist2", 0.0, float("inf")),
+}
+
+
+@pytest.mark.parametrize("name", list(_TOPK_SHAPE))
+def test_topk_bounded_output(spark, q, twin_sf, name):
+    """≤3 rows per id with contiguous ranks and the score in range —
     the bounded-write contract itself."""
-    rows = q["dedup_minhash_topk"](spark, twin_sf).collect()
-    per_doc: dict[int, list[int]] = {}
+    id_col, score, lo, hi = _TOPK_SHAPE[name]
+    rows = q[name](spark, twin_sf).collect()
+    assert rows
+    per_id: dict[int, list[int]] = {}
     for r in rows:
-        per_doc.setdefault(r.doc_id, []).append(r.rk)
-        assert 0.0 <= r.jaccard <= 1.0
-    for doc, rks in per_doc.items():
+        per_id.setdefault(r[id_col], []).append(r.rk)
+        assert lo <= r[score] <= hi
+    for rks in per_id.values():
         assert sorted(rks) == list(range(1, len(rks) + 1))
         assert len(rks) <= 3
 
