@@ -53,6 +53,17 @@ def read_parquet_retrying(
             time.sleep(delay_s)
 
 
+def write_atomic(path: str, text: str) -> None:
+    """Replace ``path`` by ``text`` with one ``os.replace``: a reader
+    sees the old content or the new, never a partial file. The temp file
+    is a dot-file in the same directory, so the rename stays on one
+    filesystem and directory readers skip it."""
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
 def table_fingerprint(sf_dir: str, name: str) -> tuple[str, tuple | None]:
     """``(path, stat)`` for ``<sf_dir>/<name>.parquet``: the absolute path
     and ``(relpath, size, mtime_ns)`` of every file under it, nested

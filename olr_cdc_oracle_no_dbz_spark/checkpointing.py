@@ -1,9 +1,9 @@
 """Lineage truncation policy (VERDICT r3 item 5).
 
-Iterative plans (the connected-components fixpoint) and read-then-
-overwrite merges (ParquetStateTable) must cut lineage each round —
-otherwise the plan tree grows per iteration and the overwrite would
-lazily scan files it is replacing. Two ways to cut it:
+Iterative plans (the connected-components fixpoint) must cut lineage
+each round — otherwise the plan tree grows per iteration — and shared
+intermediates of registry queries cut it once so several consumers
+read one materialization. Two ways to cut it:
 
 - ``localCheckpoint`` (default): executor-local block storage. Fast
   (no distributed filesystem round-trip) and correct on this
@@ -33,11 +33,10 @@ DURABLE_CONF = "spark.graft.checkpoint.durable"
 def truncate_lineage(df: DataFrame, *, eager: bool = True) -> DataFrame:
     """Materialize ``df`` and return a lineage-free DataFrame.
 
-    Eager by default: most callers overwrite inputs right after
-    (state-merge) or iterate on the result (CC fixpoint), so laziness
-    there would defeat the point. Pass ``eager=False`` from REGISTRY
-    query builders (lazy-construction contract: building a query must
-    not run a job — ``--explain``, ``dump_plans``, and the test_plans
+    Eager by default: most callers iterate on the result (CC
+    fixpoint), so laziness there would defeat the point. Pass
+    ``eager=False`` from REGISTRY query builders (lazy-construction
+    contract: building a query must not run a job — ``--explain``, ``dump_plans``, and the test_plans
     sweeps construct hundreds of plans without executing them; an
     eager cut there runs a real Spark job per construction and strands
     unreplicated checkpoint blocks in executor storage, ADVICE r6).

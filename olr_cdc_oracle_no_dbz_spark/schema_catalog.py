@@ -40,6 +40,7 @@ import re
 
 from pyspark.sql import types as T
 
+from olr_cdc_oracle_no_dbz_spark.catalog import write_atomic
 from olr_cdc_oracle_no_dbz_spark.cdc.materialize import _wider_type
 from olr_cdc_oracle_no_dbz_spark.serde import avro_schema_for
 
@@ -191,10 +192,7 @@ class SchemaCatalog:
             (".avsc", avro_schema_for(struct, name=subject)),
             (".spark.json", json.dumps(struct.jsonValue(), indent=2)),
         ):
-            tmp = os.path.join(d, f".v{n}{suffix}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(payload)
-            os.replace(tmp, os.path.join(d, f"v{n}{suffix}"))
+            write_atomic(os.path.join(d, f"v{n}{suffix}"), payload)
         return n
 
     def check_and_register(self, subject: str, struct: T.StructType) -> int:

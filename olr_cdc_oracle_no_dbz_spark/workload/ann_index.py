@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from olr_cdc_oracle_no_dbz_spark.catalog import write_atomic
 from olr_cdc_oracle_no_dbz_spark.workload import register
 from olr_cdc_oracle_no_dbz_spark.workload.ext_queries import (
     _ADC_COS,
@@ -206,15 +207,8 @@ def build_ann_index(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         "appended": [],
         "max_vec_id": max_vec_id,
     }
-    _write_manifest(out_dir, manifest)
+    write_atomic(os.path.join(out_dir, _MANIFEST), json.dumps(manifest, indent=2))
     return manifest
-
-
-def _write_manifest(out_dir: str, manifest: dict) -> None:
-    tmp = os.path.join(out_dir, f".{_MANIFEST}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=2)
-    os.replace(tmp, os.path.join(out_dir, _MANIFEST))
 
 
 def append_to_index(
@@ -344,7 +338,7 @@ def append_to_index(
             "indexed_max_vec_id": manifest["max_vec_id"],
             "source_max_vec_id": src["mx"],
         }
-    _write_manifest(index_dir, manifest)
+    write_atomic(os.path.join(index_dir, _MANIFEST), json.dumps(manifest, indent=2))
     return manifest
 
 

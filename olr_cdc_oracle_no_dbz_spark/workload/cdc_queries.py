@@ -198,7 +198,7 @@ def cdc_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the store's merge cost is O(delta + touched buckets), and
     compact rewrites ONLY buckets holding dead tombstones —
-    streaming/state.py:158; the gate runs it on a 32-bucket table so
+    ``ParquetStateTable.compact``; the gate runs it on a 32-bucket table so
     the pruning path (not a degenerate 1-bucket rewrite) is what's
     checked."""
     ev = t(spark, sf_dir, "events")

@@ -740,11 +740,10 @@ def test_state_merge_plan_one_lww_exchange_then_bucket_repartition(
     """``ParquetStateTable.merge_batch`` on an existing table: ONE LWW
     aggregate (one Exchange on the key) over state ∪ raw delta, and the
     merged rows repartitioned on ``bucket_id`` into min(cores, buckets
-    written) partitions right below the lineage cut, so the bucket
+    written) partitions at the root of the written frame, so the bucket
     files are written by every core instead of one coalesced task."""
     import re
 
-    from olr_cdc_oracle_no_dbz_spark.streaming import state as state_mod
     from olr_cdc_oracle_no_dbz_spark.streaming.state import ParquetStateTable
 
     cols = "id int, stock int, scn long, seq int, __deleted boolean"
@@ -756,16 +755,16 @@ def test_state_merge_plan_one_lww_exchange_then_bucket_repartition(
     delta = spark.createDataFrame(
         [(i % 12, i, 2 + i, 1, i % 5 == 0) for i in range(30)], cols
     )
-    cut = []
-    real = state_mod.truncate_lineage
+    written = []
+    real = ParquetStateTable._commit
 
-    def capture(df, **kw):
-        cut.append(_plan(df))
-        return real(df, **kw)
+    def capture(self, manifest, rows, buckets):
+        written.append(_plan(rows))
+        return real(self, manifest, rows, buckets)
 
-    monkeypatch.setattr(state_mod, "truncate_lineage", capture)
+    monkeypatch.setattr(ParquetStateTable, "_commit", capture)
     table.merge_batch(delta)
-    (plan,) = cut
+    (plan,) = written
     assert len(re.findall(r"Exchange hashpartitioning\(id#", plan)) == 1, plan
     touched = delta.select(table._bucket_col()).distinct().count()
     parts = min(spark.sparkContext.defaultParallelism, touched)

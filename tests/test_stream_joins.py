@@ -1,9 +1,14 @@
 """Streaming join tests: J2 stream–stream interval join (watermarked,
 real two-stream run), J1 stream–static enrich through foreachBatch, and
-direct double-apply idempotence of the bucketed state merge (ST3)."""
+direct double-apply idempotence of the bucketed state merge (ST3) and
+its manifest commit (snapshot reads, crash points, refusal of a table
+without a manifest)."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from olr_cdc_oracle_no_dbz_spark.streaming import (
@@ -201,8 +206,8 @@ def test_state_merge_double_apply_idempotent(spark, tmp_path):
 def test_state_compact_gc_tombstones(spark, tmp_path):
     """State-table tombstone GC (the VACUUM analog): tombstones at or
     below the watermark vanish, newer ones survive as redelivery
-    guards, fully-dead buckets disappear from disk, and live rows are
-    untouched."""
+    guards, fully-dead buckets drop out of the manifest, and live rows
+    are untouched."""
     state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=4)
     rows = [
         (1, 10, 1, False, 5),   # live
@@ -233,8 +238,8 @@ def test_state_compact_gc_tombstones(spark, tmp_path):
 
 def test_state_merge_empty_batch_is_noop(spark, tmp_path):
     """An empty micro-batch (common under availableNow retries) must
-    leave state untouched: zero touched buckets, dynamic overwrite
-    writes no partitions, existing data survives."""
+    leave state untouched: zero touched buckets, no bucket file
+    written, existing data survives."""
     state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=4)
     schema = "id int, scn long, seq int, __deleted boolean, stock int"
     state.merge_batch(spark.createDataFrame([(1, 1, 1, False, 5)], schema))
@@ -244,16 +249,165 @@ def test_state_merge_empty_batch_is_noop(spark, tmp_path):
 
 def test_state_compact_keeps_null_flag_rows(spark, tmp_path):
     """Review r4 finding: a state row with NULL __deleted (e.g. a bucket
-    file written before that column existed, read via mergeSchema) must
-    SURVIVE compaction — a three-valued predicate would silently drop it
-    from both the dead and kept sides."""
+    file written before that column existed, merged with a later one)
+    must SURVIVE compaction — a three-valued predicate would silently
+    drop it from both the dead and kept sides."""
     state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=1)
-    internal = spark.createDataFrame(
-        [(1, 10, 1, None, 5), (2, 5, 1, True, 0)],
-        "id int, scn long, seq int, __deleted boolean, stock int",
-    ).withColumn("bucket_id", F.lit(0))
-    internal.write.partitionBy("bucket_id").parquet(state.data_dir)
+    state.merge_batch(
+        spark.createDataFrame([(1, 10, 1, 5)], "id int, scn long, seq int, stock int")
+    )
+    state.merge_batch(
+        spark.createDataFrame(
+            [(2, 5, 1, True, 0)],
+            "id int, scn long, seq int, __deleted boolean, stock int",
+        )
+    )
 
     assert state.compact(tombstone_watermark_scn=50) == 1  # only the true tombstone
     kept = state.read_internal().collect()
     assert [(r["id"], r["stock"]) for r in kept] == [(1, 5)]
+
+
+_STATE_COLS = "id int, scn long, seq int, __deleted boolean, stock int"
+
+
+def _snapshot(df):
+    return sorted((r["id"], r["stock"], r["__deleted"]) for r in df.collect())
+
+
+def test_state_snapshot_survives_a_later_merge(spark, tmp_path):
+    """A ``current()`` DataFrame is one committed version: built before a
+    merge and run after it, it still reads the before-snapshot (the
+    merge adds files and swaps the manifest; it replaces nothing)."""
+    state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=4)
+    state.merge_batch(
+        spark.createDataFrame([(i, 10, 1, False, i) for i in range(20)], _STATE_COLS)
+    )
+    before = _snapshot(state.current("rewrite"))
+    snap = state.current("rewrite")
+    state.merge_batch(
+        spark.createDataFrame(
+            [(i, 20, 1, i % 3 == 0, 100 + i) for i in range(0, 40, 2)], _STATE_COLS
+        )
+    )
+    assert _snapshot(snap) == before
+    assert _snapshot(state.current("rewrite")) != before
+
+
+def test_state_current_construction_runs_no_job(spark, tmp_path):
+    """Building ``current()`` resolves the table through its manifest,
+    which carries the schema: no schema-inference job."""
+    import uuid
+
+    state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=4)
+    state.merge_batch(
+        spark.createDataFrame([(i, 10, 1, False, i) for i in range(20)], _STATE_COLS)
+    )
+    sc = spark.sparkContext
+    group = f"current-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build current()")
+    try:
+        state.current("rewrite")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+_SEED = [(i, 10, 1, i % 4 == 0, i) for i in range(12)]
+_DELTA = [(i, 20, 1, i % 5 == 0, 100 + i) for i in range(6, 18)]
+
+
+def _lww(rows, watermark=None):
+    """Expected ``current('rewrite')`` rows: newest (scn, seq) per key,
+    minus tombstones at or below ``watermark``."""
+    latest = {}
+    for r in sorted(rows, key=lambda r: (r[1], r[2])):
+        latest[r[0]] = r
+    return sorted(
+        (r[0], r[4], r[3])
+        for r in latest.values()
+        if not (watermark is not None and r[3] and r[1] <= watermark)
+    )
+
+
+def _parquet_names(root):
+    return {
+        n for _, _, names in os.walk(root) for n in names if n.endswith(".parquet")
+    }
+
+
+def _read_names(state):
+    return {os.path.basename(f) for f in state.current("rewrite").inputFiles()}
+
+
+@pytest.mark.parametrize("op", ["merge", "compact"])
+@pytest.mark.parametrize("step", ["write", "replace", "gc"])
+def test_state_commit_crash_leaves_a_snapshot_and_retry_converges(
+    spark, tmp_path, monkeypatch, op, step
+):
+    """A crash at any commit step (the Spark write, the manifest
+    ``os.replace``, the garbage collection) leaves exactly the before-
+    or the after-snapshot; a retry gives the after-snapshot with one row
+    per key, and no file of an uncommitted attempt is ever read."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    root = str(tmp_path / "state")
+    state = ParquetStateTable(spark, root, n_buckets=4)
+    # two seed versions, so the commit under test has superseded files
+    # to collect
+    state.merge_batch(spark.createDataFrame(_SEED[:6], _STATE_COLS))
+    state.merge_batch(spark.createDataFrame(_SEED[6:], _STATE_COLS))
+    if op == "merge":
+        delta = spark.createDataFrame(_DELTA, _STATE_COLS)
+        run, after = (lambda: state.merge_batch(delta)), _lww(_SEED + _DELTA)
+    else:
+        run, after = (lambda: state.compact(15)), _lww(_SEED, watermark=15)
+    before = _snapshot(state.current("rewrite"))
+    assert before == _lww(_SEED) != after
+    on_disk = _parquet_names(root)
+
+    # "write": the files land, then the job fails before any commit
+    owner, name, call_first = {
+        "write": (DataFrameWriter, "parquet", True),
+        "replace": (os, "replace", False),
+        "gc": (os, "remove", False),
+    }[step]
+    real = getattr(owner, name)
+
+    def crash(*args, **kwargs):
+        if call_first:
+            real(*args, **kwargs)
+        raise OSError(f"injected crash at {step}")
+
+    with monkeypatch.context() as m:
+        m.setattr(owner, name, crash)
+        with pytest.raises(OSError, match="injected"):
+            run()
+    crashed = _parquet_names(root) - on_disk
+    seen = _snapshot(state.current("rewrite"))
+    assert seen in (before, after)
+    if seen == before:
+        assert not crashed & _read_names(state)
+
+    run()
+    assert _snapshot(state.current("rewrite")) == after
+    assert state.read_internal().count() == len(after)  # one row per key
+    if seen == before:
+        assert not crashed & _read_names(state)
+
+
+def test_state_refuses_bucket_files_without_manifest(spark, tmp_path):
+    """A state directory holding bucket files but no manifest (a table
+    written by an engine version without one) is refused, not read as
+    empty: treating it as a new table would drop every key it holds."""
+    state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=1)
+    spark.createDataFrame([(1, 10, 1, False, 5)], _STATE_COLS).withColumn(
+        "bucket_id", F.lit(0)
+    ).write.partitionBy("bucket_id").parquet(state.data_dir)
+    with pytest.raises(RuntimeError, match="manifest"):
+        state.current()
+    with pytest.raises(RuntimeError, match="manifest"):
+        state.merge_batch(
+            spark.createDataFrame([(2, 11, 1, False, 6)], _STATE_COLS)
+        )
