@@ -7,20 +7,23 @@ Re-expresses the reference sink connector semantics (README.md:775-798):
 source columns widen the sink schema.
 
 Design for 100 TB:
-- LWW dedup is ONE hash-partition shuffle on the key (window row_number);
-  with AQE skew-join/partition-coalescing on, a hot key splits at runtime.
+- LWW dedup (``latest_state``) is ONE hash-partition shuffle on the key,
+  behind a partial aggregate; with AQE skew-join/partition-coalescing on,
+  a hot key splits at runtime.
 - merge_into_state unions state+delta and runs LWW once over both — at
   scale this maps 1:1 onto a storage-side MERGE (Delta/Iceberg). The delta
   is not compacted first: the (scn, seq) order is total, so the winner of
-  state ∪ delta equals the winner of state ∪ LWW(delta), and max_by's
-  partial aggregation already collapses the delta's duplicates map-side.
+  state ∪ delta equals the winner of state ∪ LWW(delta). Given a bucket
+  column (the bucketed state table), its one shuffle is the bucket
+  repartition the bucket files are written from, and the LWW groups by
+  (bucket, key) inside each partition, so the merge has no key Exchange.
 - The max-applied-SCN guard makes redelivery idempotent (reference relies
   on upsert idempotence the same way, README.md:788-790).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: sentinel ordering columns: commit SCN, then intra-txn seq
@@ -151,11 +154,24 @@ def _align_schemas(state: DataFrame, delta: DataFrame) -> tuple[DataFrame, DataF
     return widen(state, state_types), widen(delta, delta_types)
 
 
+def _union_evolved(state: DataFrame, delta: DataFrame) -> DataFrame:
+    """state ∪ delta over the column superset. When every shared column
+    already has one type, a by-name union null-fills the missing columns
+    by itself; only a type change needs ``_align_schemas``' per-column
+    widening select."""
+    delta_types = dict(delta.dtypes)
+    if all(delta_types.get(c, t) == t for c, t in state.dtypes):
+        return state.unionByName(delta, allowMissingColumns=True)
+    state, delta = _align_schemas(state, delta)
+    return state.unionByName(delta)
+
+
 def merge_into_state(
     state: DataFrame | None,
     delta: DataFrame,
     key_cols: tuple[str, ...] = ("id",),
     order_cols: tuple[str, ...] = DEFAULT_ORDER,
+    bucketing: tuple[str, Column, int] | None = None,
 ) -> DataFrame:
     """Incremental upsert+delete merge of a new changelog batch into state.
 
@@ -166,6 +182,13 @@ def merge_into_state(
     (SURVEY.md §4 'SCN-monotonic apply order'). The delta may hold
     several rows per key.
 
+    ``bucketing=(name, bucket, n)`` adds column ``name`` = ``bucket`` (a
+    function of the key columns) to state ∪ delta, hash-partitions the
+    union on it into ``n`` partitions and groups the LWW by (``name``,
+    *key_cols), which that partitioning already satisfies: the merge's
+    one Exchange is the bucket repartition, and the result is laid out
+    for a write partitioned by ``name``.
+
     The returned *internal* state keeps tombstones (``__deleted=true``
     rows) and the (scn, seq) watermark columns: dropping a tombstone
     early would let a redelivered older event resurrect a deleted key.
@@ -173,10 +196,12 @@ def merge_into_state(
     this whole function becomes one ``MERGE INTO``; auto table creation
     (``auto.create: true``, README.md:786) is the ``state=None`` case.
     """
-    if state is None:
-        return latest_state(delta, key_cols, order_cols)
-    state, delta = _align_schemas(state, delta)
-    return latest_state(state.unionByName(delta), key_cols, order_cols)
+    merged = delta if state is None else _union_evolved(state, delta)
+    if bucketing is None:
+        return latest_state(merged, key_cols, order_cols)
+    name, bucket, n = bucketing
+    merged = merged.withColumn(name, bucket).repartition(n, name)
+    return latest_state(merged, (name, *key_cols), order_cols)
 
 
 def publish(

@@ -6,6 +6,14 @@ foreachBatch{ merge into bucketed state } with a checkpoint directory
 (ST1 continuous processing, ST2 checkpointed resume, ST3 idempotent
 redelivery via the merge's SCN guard, ST4 maxFilesPerTrigger
 backpressure).
+
+The decode → filter → unwrap plan is built once, on the streaming
+DataFrame, so a micro-batch pays no per-batch DataFrame construction
+for it (except under ``require_commit``, whose commit filter needs the
+batch's markers). Each batch's delta is persisted, and the merge's one observed
+pass over it both fills that cache and finds the touched buckets; an
+empty batch is the merge's empty bucket set, with no separate
+emptiness action.
 """
 
 from __future__ import annotations
@@ -79,23 +87,32 @@ def materialize_stream(
     if (schema_catalog is None) != (subject is None):
         raise ValueError("schema_catalog and subject must be passed together")
 
-    def _apply(batch_df, batch_id: int) -> None:
-        ev = filter_source(
-            batch_df.filter(F.col("_corrupt").isNull()), owner, table
+    def _delta(ev):
+        # the unwrapped rows carry only the state's ordering columns as
+        # metadata: ``op`` is not a sink column
+        return unwrap(
+            filter_source(ev, owner, table),
+            mode="rewrite",
+            meta_cols=state.order_cols,
         )
+
+    feed = read_change_stream(
+        spark, source_dir, schema, max_files_per_trigger
+    ).filter(F.col("_corrupt").isNull())
+    # committed_only needs each batch's commit markers, which the table
+    # filter drops (they carry no schema block), so that delta is built
+    # per batch; otherwise the whole decode is planned once, here
+    stream = feed if require_commit else _delta(feed)
+
+    def _apply(batch_df, batch_id: int) -> None:
         if require_commit:
-            # markers are NOT table-filtered (they carry no schema block)
-            committed = committed_only(
-                batch_df.filter(F.col("_corrupt").isNull())
-            ).drop("commit_scn")
-            ev = filter_source(committed, owner, table)
-        # decoded once: isEmpty, the touched-bucket collect, the merge
-        # and the mirror's compaction all read this one copy, so the
-        # feed is scanned (and counted in numInputRows) once per batch
-        delta = unwrap(ev, mode="rewrite").persist(StorageLevel.MEMORY_AND_DISK)
+            batch_df = _delta(committed_only(batch_df).drop("commit_scn"))
+        # decoded once: the merge's touched-bucket pass fills this cache,
+        # the merge and the mirror's compaction read it, so the feed is
+        # scanned (and counted in numInputRows) once per batch
+        delta = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            if not delta.isEmpty():
-                _apply_delta(delta)
+            _apply_delta(delta)
         finally:
             delta.unpersist()
 
@@ -146,10 +163,8 @@ def materialize_stream(
                 parallelism=jdbc_sink.get("parallelism", 1),
             )
 
-    writer = (
-        read_change_stream(spark, source_dir, schema, max_files_per_trigger)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
+    writer = stream.writeStream.foreachBatch(_apply).option(
+        "checkpointLocation", checkpoint_dir
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
@@ -214,9 +229,7 @@ def materialize_stream_tables(
                 ev = filter_source(
                     ev.filter(F.col("_corrupt").isNull()), owner, table
                 )
-                delta = unwrap(ev, mode="rewrite")
-                if delta.isEmpty():
-                    continue
+                delta = unwrap(ev, mode="rewrite", meta_cols=state.order_cols)
                 if schema_catalog is not None:
                     image = delta.drop("__deleted", *state.order_cols).schema
                     schema_catalog.check_and_register(

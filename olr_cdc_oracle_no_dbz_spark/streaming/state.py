@@ -9,7 +9,9 @@ the world per batch. This store fixes that:
   pmod(xxhash64(key), n_buckets)`` (NOT underscore-prefixed: Hadoop's
   hidden-path filter would skip ``_*`` partition directories on read).
 - A merge reads ONLY the buckets the delta touches and writes new files
-  for only those buckets.
+  for only those buckets. One observed pass over the delta finds them
+  (and fills its cache); the merge itself is one Exchange, the bucket
+  repartition the files are written from.
 - Per-batch cost is O(|delta| + touched_buckets * bucket_size), not
   O(|state|). With n_buckets sized so a bucket fits an executor
   (e.g. 100 TB / 65536 buckets ≈ 1.6 GB), a small delta touches a small
@@ -34,7 +36,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -52,9 +54,15 @@ from olr_cdc_oracle_no_dbz_spark.schema_catalog import evolve_struct
 _BUCKET = "bucket_id"
 
 
-def _buckets_of(bucket_ids: DataFrame) -> list[int]:
-    """The distinct values of a one-column bucket-id frame."""
-    return [r[0] for r in bucket_ids.distinct().collect()]
+def _observed(df: DataFrame, **aggs: Column) -> dict:
+    """Run ``df`` once, as a ``noop`` write, and return the aggregates
+    ``aggs`` observed over its rows: one job, which also fills ``df``'s
+    cache when ``df`` is persisted."""
+    obs = Observation()
+    df.observe(obs, *[agg.alias(name) for name, agg in aggs.items()]).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    return obs.get
 
 
 class ParquetStateTable:
@@ -159,6 +167,8 @@ class ParquetStateTable:
         before = self._listing(written)
         rows.write.mode("append").partitionBy(_BUCKET).parquet(self.data_dir)
         new = {f for f in self._listing(written) - before if f.endswith(".parquet")}
+        if not new and manifest["schema"] is None:
+            return  # an empty first write creates no table
         files = sorted(
             new | {f for f in manifest["files"] if os.path.dirname(f) not in written}
         )
@@ -181,8 +191,17 @@ class ParquetStateTable:
 
     def merge_batch(self, delta: DataFrame) -> None:
         """Apply one changelog batch: merge it into the touched buckets
-        only (one LWW pass over those buckets ∪ the delta) and commit the
-        merged rows as those buckets' new files.
+        only and commit the merged rows as those buckets' new files.
+
+        On an existing table one observed ``noop`` pass over the delta
+        collects the set of buckets it touches (at most ``n_buckets``
+        ids, whatever the batch size) and fills the delta's cache if it
+        is persisted; an empty set is an empty batch, which commits
+        nothing. The merge is one LWW pass over those buckets ∪ the
+        delta behind one Exchange, the ``bucket_id`` repartition the
+        files are written from. The first write skips the bucket pass:
+        it writes every bucket the delta has, and an empty one creates
+        no table.
 
         Safe under redelivery: ``merge_into_state``'s (scn, seq) guard
         makes re-applying a batch a no-op, so ``foreachBatch`` retries
@@ -192,16 +211,21 @@ class ParquetStateTable:
         manifest = self._manifest()
         state, buckets = None, range(self.n_buckets)
         if manifest["schema"] is not None:
-            buckets = _buckets_of(delta.select(self._bucket_col()))
-            state = self.read_internal(buckets)
-        merged = merge_into_state(
-            state, delta, self.key_cols, self.order_cols
-        ).withColumn(_BUCKET, self._bucket_col())
-        # One write task per core, each writing whole buckets: per-file
-        # cost dominates the write, so n_buckets tasks (or the single
-        # partition AQE coalesces a small merge shuffle into) is slower.
+            seen = _observed(delta, buckets=F.collect_set(self._bucket_col()))
+            buckets = sorted(seen["buckets"])
+            if not buckets:
+                return
+            state = self.read_internal(buckets).drop(_BUCKET)
+        # The merge's one shuffle puts whole buckets in min(cores, buckets
+        # written) partitions, so each core writes its buckets' files.
+        # Per-file cost dominates the write: n_buckets tasks (or the one
+        # partition AQE would coalesce a small shuffle into) is slower.
         parts = max(1, min(self.spark.sparkContext.defaultParallelism, len(buckets)))
-        self._commit(manifest, merged.repartition(parts, _BUCKET), buckets)
+        merged = merge_into_state(
+            state, delta, self.key_cols, self.order_cols,
+            bucketing=(_BUCKET, self._bucket_col(), parts),
+        )
+        self._commit(manifest, merged, buckets)
 
     def bootstrap(self, snapshot: DataFrame, scn: int = 0) -> None:
         """Initialize state from a source snapshot (S2→K2 bootstrap: the
@@ -250,13 +274,14 @@ class ParquetStateTable:
         dead = F.col("__deleted").eqNullSafe(True) & F.coalesce(
             F.col(self.order_cols[0]) <= tombstone_watermark_scn, F.lit(False)
         )
-        touched = _buckets_of(state.filter(dead).select(_BUCKET))
+        seen = _observed(
+            state.filter(dead), buckets=F.collect_set(_BUCKET), n_dead=F.count("*")
+        )
+        touched = sorted(seen["buckets"])
         if not touched:
             return 0
-        affected = self.read_internal(touched)
-        n_dead = affected.filter(dead).count()
-        self._commit(manifest, affected.filter(~dead), touched)
-        return n_dead
+        self._commit(manifest, self.read_internal(touched).filter(~dead), touched)
+        return seen["n_dead"]
 
     # -- queries ----------------------------------------------------------
 

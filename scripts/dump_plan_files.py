@@ -10,10 +10,15 @@ query_mix runs at sf0.01, so point SPARK_GRAFT_SF_DIR at the sf0.01
 testdata when the receipt must match the bench's derived
 widths/parameters.
 
+Besides the registry gates, ``state_merge`` dumps the frame
+``ParquetStateTable.merge_batch`` writes when it merges the fixed delta
+of ``tests/test_plans.py``'s state-merge plan pin into an 8-bucket
+table, built in a temporary directory that the file shows as ``<tmp>``.
+
 Expression ids (`name#<n>`), `plan_id=<n>` and `RDD[<n>]` are
-renumbered in order of first appearance, so two plans with the same
-structure write identical files and a before/after diff shows only
-real plan changes.
+renumbered in order of first appearance, and file-name UUIDs read
+`<uuid>`, so two plans with the same structure write identical files
+and a before/after diff shows only real plan changes.
 """
 
 from __future__ import annotations
@@ -21,21 +26,44 @@ from __future__ import annotations
 import os
 import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _ID = re.compile(r"(#|plan_id=|RDD\[)(\d+)")
+_UUID = re.compile(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}")
 
 
 def normalize_ids(plan: str) -> str:
-    """Renumber each id family from 0 in order of first appearance."""
+    """Renumber each id family from 0 in order of first appearance and
+    replace each UUID with ``<uuid>``."""
     seen: dict[str, dict[str, int]] = {}
 
     def sub(m: re.Match) -> str:
         ids = seen.setdefault(m.group(1), {})
         return m.group(1) + str(ids.setdefault(m.group(2), len(ids)))
 
-    return _ID.sub(sub, plan)
+    return _ID.sub(sub, _UUID.sub("<uuid>", plan))
+
+
+def state_merge(spark, path):
+    """The frame a merge into an existing state table at ``path`` hands
+    to its commit: the state-merge plan pin's seed and delta."""
+    from olr_cdc_oracle_no_dbz_spark.streaming.state import ParquetStateTable
+
+    cols = "id int, stock int, scn long, seq int, __deleted boolean"
+    table = ParquetStateTable(spark, path, n_buckets=8)
+    table.merge_batch(
+        spark.createDataFrame([(i, i, 1, 1, False) for i in range(40)], cols)
+    )
+    delta = spark.createDataFrame(
+        [(i % 12, i, 2 + i, 1, i % 5 == 0) for i in range(30)], cols
+    )
+    written = []
+    table._commit = lambda manifest, rows, buckets: written.append(rows)
+    table.merge_batch(delta)
+    (rows,) = written
+    return rows
 
 
 def main() -> int:
@@ -54,12 +82,16 @@ def main() -> int:
     spark = get_spark("dump_plan_files")
     qs = queries()
     for name in names:
-        df = qs[name](spark, sf_dir)
-        plan = normalize_ids(
-            df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-        )
+        with tempfile.TemporaryDirectory() as tmp:
+            if name == "state_merge":
+                df = state_merge(spark, tmp)
+            else:
+                df = qs[name](spark, sf_dir)
+            plan = normalize_ids(
+                df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
+            ).replace(tmp, "<tmp>")
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

@@ -1,6 +1,7 @@
 """Durable-vs-local lineage truncation (VERDICT r3 item 5): both modes
-must produce identical results for the CC fixpoint and the state-table
-merge; durable mode must demand a checkpoint dir."""
+must produce identical results for the lineage cuts' callers (the
+near-dup clusters and the CC fixpoint); durable mode must demand a
+checkpoint dir."""
 
 from __future__ import annotations
 
@@ -11,7 +12,6 @@ from olr_cdc_oracle_no_dbz_spark.checkpointing import (
     DURABLE_CONF,
     truncate_lineage,
 )
-from olr_cdc_oracle_no_dbz_spark.streaming.state import ParquetStateTable
 from olr_cdc_oracle_no_dbz_spark.workload import queries
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -58,17 +58,23 @@ def test_dedup_clusters_identical_under_durable(spark, durable):
     assert got == base and got
 
 
-def test_state_merge_identical_under_durable(spark, durable, tmp_path):
-    rows = [(i % 7, i, 0, i % 11 == 0, float(i)) for i in range(50)]
-    schema = "id int, scn long, seq int, __deleted boolean, val double"
+def test_connected_components_identical_under_durable(spark, durable, tmp_path):
+    """Label propagation cuts its lineage every round (``driver_cutover=0``
+    keeps it off the driver union-find): durable and local cuts give the
+    same labels, and the durable run really wrote checkpoints."""
+    from olr_cdc_oracle_no_dbz_spark.graph import connected_components
 
-    def run(path):
-        st = ParquetStateTable(spark, str(path), key_cols=("id",))
-        st.merge_batch(spark.createDataFrame(rows[:30], schema))
-        st.merge_batch(spark.createDataFrame(rows[30:], schema))
-        return {tuple(r) for r in st.current().select("id", "val").collect()}
+    # chains of 7 vertices: several rounds per component
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(42) if i % 7 != 6], "s long, d long"
+    )
 
-    got = run(tmp_path / "durable_state")
+    def run():
+        labels = connected_components(edges, driver_cutover=0)
+        return {tuple(r) for r in labels.collect()}
+
+    got = run()
+    assert list((tmp_path / "ckpt").rglob("rdd-*"))
     spark.conf.set(DURABLE_CONF, "false")
-    base = run(tmp_path / "local_state")
+    base = run()
     assert got == base and got

@@ -153,3 +153,49 @@ def test_materialize_stream_with_jdbc_mirror(spark, tmp_path):
     with sqlite3.connect(db_path) as db:
         got = db.execute("SELECT id, stock FROM products").fetchall()
     assert got == [(2, 3)]
+
+
+def test_materialize_stream_keeps_sink_columns(spark, tmp_path):
+    """After a streamed batch, ``current()`` and the mirror have exactly
+    the row image's columns: the change-event ``op`` is bookkeeping, not
+    a sink column, so it reaches neither the state table nor an
+    ``auto.evolve`` ALTER of the mirror (ExtractNewRecordState with
+    ``delete.handling.mode: rewrite`` emits no such column)."""
+    from olr_cdc_oracle_no_dbz_spark.streaming import (
+        ParquetStateTable,
+        materialize_stream,
+    )
+    from tests.conftest import event, product_row
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    db_path = str(tmp_path / "mirror.db")
+    image = ["id", "name", "description", "price", "stock",
+             "created_date", "updated_date"]
+    with sqlite3.connect(db_path) as db:
+        db.execute(
+            "CREATE TABLE products (id INT PRIMARY KEY, name VARCHAR(100),"
+            " description VARCHAR(500), price VARCHAR(20), stock INT,"
+            " created_date VARCHAR(30), updated_date VARCHAR(30))"
+        )
+
+    def factory():
+        import decimal
+
+        sqlite3.register_adapter(decimal.Decimal, str)
+        return sqlite3.connect(db_path, timeout=60)
+
+    state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=4)
+    r1 = product_row(1, "Test Product", "99.99", 10)
+    write_tx_file(src, "tx1.json", [event(100, "c", after=r1)])
+    write_tx_file(src, "tx2.json", [event(101, "u", before=r1, after=dict(r1, stock=3))])
+    q = materialize_stream(
+        spark, src, state, ckpt,
+        jdbc_sink={"connection_factory": factory, "table": "products"},
+    )
+    q.awaitTermination(120)
+
+    assert state.current().columns == image
+    with sqlite3.connect(db_path) as db:
+        cols = [r[1] for r in db.execute("PRAGMA table_info(products)")]
+        assert cols == image
+        assert db.execute("SELECT id, stock FROM products").fetchall() == [(1, 3)]

@@ -294,24 +294,30 @@ def test_state_snapshot_survives_a_later_merge(spark, tmp_path):
     assert _snapshot(state.current("rewrite")) != before
 
 
+def _jobs(spark, run) -> int:
+    """The number of Spark jobs ``run()`` starts, counted through a job
+    group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_state_current_construction_runs_no_job(spark, tmp_path):
     """Building ``current()`` resolves the table through its manifest,
     which carries the schema: no schema-inference job."""
-    import uuid
-
     state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=4)
     state.merge_batch(
         spark.createDataFrame([(i, 10, 1, False, i) for i in range(20)], _STATE_COLS)
     )
-    sc = spark.sparkContext
-    group = f"current-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "build current()")
-    try:
-        state.current("rewrite")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert _jobs(spark, lambda: state.current("rewrite")) == 0
 
 
 _SEED = [(i, 10, 1, i % 4 == 0, i) for i in range(12)]
@@ -329,6 +335,37 @@ def _lww(rows, watermark=None):
         for r in latest.values()
         if not (watermark is not None and r[3] and r[1] <= watermark)
     )
+
+
+def test_state_merge_into_existing_table_runs_three_jobs(spark, tmp_path):
+    """A merge into an existing table: one observed pass finds the
+    touched buckets, then the merge's one shuffle stage and the write."""
+    state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=4)
+    state.merge_batch(spark.createDataFrame(_SEED, _STATE_COLS))
+    delta = spark.createDataFrame(_DELTA, _STATE_COLS)
+    assert _jobs(spark, lambda: state.merge_batch(delta)) == 3
+    assert _snapshot(state.current("rewrite")) == _lww(_SEED + _DELTA)
+
+
+def test_state_merge_empty_delta_commits_nothing(spark, tmp_path):
+    """An empty delta on an existing table is one observed pass that
+    finds no bucket: no write, and the manifest is not rewritten."""
+    state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=4)
+    state.merge_batch(spark.createDataFrame(_SEED, _STATE_COLS))
+    with open(state.manifest_path, "rb") as fh:
+        before = fh.read()
+    empty = spark.createDataFrame([], _STATE_COLS)
+    assert _jobs(spark, lambda: state.merge_batch(empty)) <= 1
+    with open(state.manifest_path, "rb") as fh:
+        assert fh.read() == before
+
+
+def test_state_empty_first_delta_creates_no_table(spark, tmp_path):
+    """An empty first delta leaves the table uncreated, so a later
+    ``bootstrap`` is still allowed."""
+    state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=4)
+    state.merge_batch(spark.createDataFrame([], _STATE_COLS))
+    assert not state.exists()
 
 
 def _parquet_names(root):

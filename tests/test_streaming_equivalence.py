@@ -229,6 +229,9 @@ def test_multi_table_routing_streaming_matches_batch_gate_sf01(spark, tmp_path):
     raw.filter(F.crc32(F.col("value")) % 2 == 1).write.mode("append").text(src)
     q = materialize_stream_tables(spark, src, routes, ckpt)
     q.awaitTermination(300)
+    # each sink table has exactly its row image's columns (no ``op``)
+    assert states["users"].current().columns == users_schema.fieldNames()
+    assert states["orders"].current().columns == orders_schema.fieldNames()
 
     got = (
         states["users"]
