@@ -23,7 +23,7 @@ Design for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: sentinel ordering columns: commit SCN, then intra-txn seq
@@ -171,7 +171,7 @@ def merge_into_state(
     delta: DataFrame,
     key_cols: tuple[str, ...] = ("id",),
     order_cols: tuple[str, ...] = DEFAULT_ORDER,
-    bucketing: tuple[str, Column, int] | None = None,
+    bucketing: tuple[str, int] | None = None,
 ) -> DataFrame:
     """Incremental upsert+delete merge of a new changelog batch into state.
 
@@ -182,10 +182,10 @@ def merge_into_state(
     (SURVEY.md §4 'SCN-monotonic apply order'). The delta may hold
     several rows per key.
 
-    ``bucketing=(name, bucket, n)`` adds column ``name`` = ``bucket`` (a
-    function of the key columns) to state ∪ delta, hash-partitions the
-    union on it into ``n`` partitions and groups the LWW by (``name``,
-    *key_cols), which that partitioning already satisfies: the merge's
+    ``bucketing=(name, n)`` names a column both sides carry, a function
+    of the key columns (the bucket id): state ∪ delta is hash-partitioned
+    on it into ``n`` partitions and the LWW groups by (``name``,
+    *key_cols), which that partitioning already satisfies. The merge's
     one Exchange is the bucket repartition, and the result is laid out
     for a write partitioned by ``name``.
 
@@ -199,9 +199,8 @@ def merge_into_state(
     merged = delta if state is None else _union_evolved(state, delta)
     if bucketing is None:
         return latest_state(merged, key_cols, order_cols)
-    name, bucket, n = bucketing
-    merged = merged.withColumn(name, bucket).repartition(n, name)
-    return latest_state(merged, (name, *key_cols), order_cols)
+    name, n = bucketing
+    return latest_state(merged.repartition(n, name), (name, *key_cols), order_cols)
 
 
 def publish(

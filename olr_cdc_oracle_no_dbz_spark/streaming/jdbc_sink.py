@@ -137,6 +137,24 @@ _SQL_TYPES = {
 }
 
 
+def _sql_type(field, dialect: str) -> str:
+    """The sink column type of a Spark field: decimals keep their
+    precision/scale, the rest map through ``_SQL_TYPES``, and an unknown
+    type fails fast rather than guessing DDL."""
+    simple = field.dataType.simpleString()
+    if simple.startswith("decimal"):
+        return simple.upper()
+    try:
+        sql_type = _SQL_TYPES[simple]
+    except KeyError:
+        raise TypeError(
+            f"no SQL mapping for column {field.name!r} of Spark type {simple!r}"
+        ) from None
+    if dialect == "mysql":
+        return sql_type.replace("DOUBLE PRECISION", "DOUBLE")
+    return sql_type
+
+
 def evolve_statements(
     table: str,
     current_cols: list[str],
@@ -146,31 +164,15 @@ def evolve_statements(
     """``auto.evolve: true`` for the JDBC sink (K5, reference
     README.md:787): one ``ALTER TABLE ... ADD COLUMN`` per column the
     batch carries that the sink table lacks (case-insensitive compare —
-    live RDBMSs fold unquoted identifiers). New columns are nullable by
-    construction: historical rows predate the column, exactly the
-    Connect sink's evolution contract. Decimal types map through with
-    their precision/scale; unknown types fail fast rather than guessing
-    DDL."""
+    live RDBMSs fold unquoted identifiers), typed by ``_sql_type``. New
+    columns are nullable by construction: historical rows predate the
+    column, exactly the Connect sink's evolution contract."""
     have = {c.lower() for c in current_cols}
-    stmts = []
-    for field in batch_schema.fields:
-        if field.name.lower() in have or field.name == "__deleted":
-            continue
-        simple = field.dataType.simpleString()
-        if simple.startswith("decimal"):
-            sql_type = simple.upper()
-        else:
-            try:
-                sql_type = _SQL_TYPES[simple]
-            except KeyError:
-                raise TypeError(
-                    f"no SQL mapping for evolved column {field.name!r} of "
-                    f"Spark type {simple!r}"
-                ) from None
-        if dialect == "mysql":  # mysql has no BLOB-vs-bytea divergence here,
-            sql_type = sql_type.replace("DOUBLE PRECISION", "DOUBLE")
-        stmts.append(f"ALTER TABLE {table} ADD COLUMN {field.name} {sql_type}")
-    return stmts
+    return [
+        f"ALTER TABLE {table} ADD COLUMN {f.name} {_sql_type(f, dialect)}"
+        for f in batch_schema.fields
+        if f.name.lower() not in have and f.name != "__deleted"
+    ]
 
 
 def stage_table_name(table: str) -> str:
@@ -183,26 +185,13 @@ def stage_table_name(table: str) -> str:
 
 def _stage_ddl(table: str, batch_schema, dialect: str) -> str:
     """CREATE TABLE for the staging table: every data column at its
-    sink type plus the __deleted flag. Reuses the evolve_statements
-    type mapping so stage and target always agree on types."""
-    cols = []
-    for field in batch_schema.fields:
-        if field.name == "__deleted":
-            continue
-        simple = field.dataType.simpleString()
-        if simple.startswith("decimal"):
-            sql_type = simple.upper()
-        else:
-            try:
-                sql_type = _SQL_TYPES[simple]
-            except KeyError:
-                raise TypeError(
-                    f"no SQL mapping for staged column {field.name!r} of "
-                    f"Spark type {simple!r}"
-                ) from None
-        if dialect == "mysql":
-            sql_type = sql_type.replace("DOUBLE PRECISION", "DOUBLE")
-        cols.append(f"{field.name} {sql_type}")
+    sink type (``_sql_type``, as ``evolve_statements`` gives the target)
+    plus the __deleted flag."""
+    cols = [
+        f"{f.name} {_sql_type(f, dialect)}"
+        for f in batch_schema.fields
+        if f.name != "__deleted"
+    ]
     cols.append("__deleted BOOLEAN")
     return f"CREATE TABLE {stage_table_name(table)} ({', '.join(cols)})"
 
@@ -257,10 +246,12 @@ def write_batch(
     paramstyle: str = "qmark",
     parallelism: int = 1,
 ) -> tuple[int, int]:
-    """Apply one LWW-compacted micro-batch to an RDBMS: upserts for live
-    rows, deletes for tombstones. Returns (n_upserts, n_deletes).
+    """Apply one micro-batch of final images to an RDBMS: upserts for
+    live rows, deletes for tombstones. Returns (n_upserts, n_deletes).
 
-    The batch must already be one-row-per-key (run latest_state first).
+    The batch must already be one-row-per-key: ``materialize_stream``
+    passes the rows the state merge committed for the batch's keys
+    (``ParquetStateTable.committed_rows``).
 
     ``parallelism=1`` (default) is the reference-faithful driver-side
     funnel (single connection, like the Connect sink's ``tasks.max: 1``,

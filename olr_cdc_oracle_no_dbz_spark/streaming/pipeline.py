@@ -2,7 +2,8 @@
 as one streaming query (SURVEY.md §3.2's Spark equivalent).
 
 readStream(change feed) → decode → owner/table filter → unwrap →
-foreachBatch{ merge into bucketed state } with a checkpoint directory
+foreachBatch{ merge into bucketed state → optional JDBC mirror of the
+rows that merge committed } with a checkpoint directory
 (ST1 continuous processing, ST2 checkpointed resume, ST3 idempotent
 redelivery via the merge's SCN guard, ST4 maxFilesPerTrigger
 backpressure).
@@ -64,15 +65,18 @@ def materialize_stream(
     batch (for feeds where, unlike OLR, uncommitted work can appear —
     OLR itself only emits on COMMIT, so the default is off).
 
-    ``jdbc_sink`` additionally materializes every compacted batch into
-    an RDBMS — the reference's literal sink (Connect JDBC upsert,
-    README.md:775-798). Keys: ``connection_factory`` (zero-arg DBAPI
-    connection callable), ``table``, optional ``dialect``/``paramstyle``/
-    ``parallelism``/``auto_evolve`` (default True: ALTERs the live
-    table when the batch carries new columns, K5). The parquet state
-    table remains the engine's scalable store; the RDBMS is a
-    reference-faithful mirror, idempotent under foreachBatch retries
-    like everything else in this path.
+    ``jdbc_sink`` additionally mirrors each batch into an RDBMS — the
+    reference's literal sink (Connect JDBC upsert, README.md:775-798).
+    Keys: ``connection_factory`` (zero-arg DBAPI connection callable),
+    ``table``, optional ``dialect``/``paramstyle``/``parallelism``/
+    ``auto_evolve`` (default True: ALTERs the live table when the rows
+    carry new columns, K5). After the merge commits, the mirror upserts
+    or deletes the committed rows of the batch's keys
+    (``ParquetStateTable.committed_rows``): the merge's (scn, seq) guard
+    is the only place an image is chosen, so a stale redelivery re-writes
+    the newer image instead of overwriting it, and a retried batch
+    re-applies the same rows. The parquet state table remains the
+    engine's scalable store; the RDBMS is a reference-faithful mirror.
 
     ``schema_catalog`` (a ``schema_catalog.SchemaCatalog``) + ``subject``
     switch on the Schema Registry analog (VERDICT r6 item 5,
@@ -108,7 +112,7 @@ def materialize_stream(
         if require_commit:
             batch_df = _delta(committed_only(batch_df).drop("commit_scn"))
         # decoded once: the merge's touched-bucket pass fills this cache,
-        # the merge and the mirror's compaction read it, so the feed is
+        # the merge and the mirror's key list read it, so the feed is
         # scanned (and counted in numInputRows) once per batch
         delta = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
@@ -125,43 +129,45 @@ def materialize_stream(
             image = delta.drop("__deleted", *state.order_cols).schema
             schema_catalog.check_and_register(subject, image)
         state.merge_batch(delta)
-        if jdbc_sink is not None:
-            from olr_cdc_oracle_no_dbz_spark.cdc.materialize import (
-                latest_state,
-            )
-            from olr_cdc_oracle_no_dbz_spark.streaming.jdbc_sink import (
-                evolve_statements,
-                write_batch,
-            )
+        if jdbc_sink is None:
+            return
+        from olr_cdc_oracle_no_dbz_spark.streaming.jdbc_sink import (
+            evolve_statements,
+            write_batch,
+        )
 
-            compacted = latest_state(delta, state.key_cols, state.order_cols)
-            factory = jdbc_sink["connection_factory"]
-            sink_table = jdbc_sink["table"]
-            if jdbc_sink.get("auto_evolve", True):
-                conn = factory()
-                try:
-                    cur = conn.cursor()
-                    cur.execute(f"SELECT * FROM {sink_table} WHERE 1=0")
-                    current = [d[0] for d in cur.description]
-                    for stmt in evolve_statements(
-                        sink_table,
-                        current,
-                        compacted.drop(*state.order_cols).schema,
-                        jdbc_sink.get("dialect", "postgresql"),
-                    ):
-                        cur.execute(stmt)
-                    conn.commit()
-                finally:
-                    conn.close()
-            write_batch(
-                compacted.drop(*state.order_cols),
-                factory,
-                sink_table,
-                list(state.key_cols),
-                dialect=jdbc_sink.get("dialect", "postgresql"),
-                paramstyle=jdbc_sink.get("paramstyle", "qmark"),
-                parallelism=jdbc_sink.get("parallelism", 1),
-            )
+        # the mirror applies what the merge committed for the batch's
+        # keys: a stale redelivery re-writes the newer image that beat it
+        rows = state.committed_rows(delta)
+        if rows is None:
+            return  # an empty first batch created no table
+        factory = jdbc_sink["connection_factory"]
+        sink_table = jdbc_sink["table"]
+        if jdbc_sink.get("auto_evolve", True):
+            conn = factory()
+            try:
+                cur = conn.cursor()
+                cur.execute(f"SELECT * FROM {sink_table} WHERE 1=0")
+                current = [d[0] for d in cur.description]
+                for stmt in evolve_statements(
+                    sink_table,
+                    current,
+                    rows.schema,
+                    jdbc_sink.get("dialect", "postgresql"),
+                ):
+                    cur.execute(stmt)
+                conn.commit()
+            finally:
+                conn.close()
+        write_batch(
+            rows,
+            factory,
+            sink_table,
+            list(state.key_cols),
+            dialect=jdbc_sink.get("dialect", "postgresql"),
+            paramstyle=jdbc_sink.get("paramstyle", "qmark"),
+            parallelism=jdbc_sink.get("parallelism", 1),
+        )
 
     writer = stream.writeStream.foreachBatch(_apply).option(
         "checkpointLocation", checkpoint_dir

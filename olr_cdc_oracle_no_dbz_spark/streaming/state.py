@@ -11,7 +11,12 @@ the world per batch. This store fixes that:
 - A merge reads ONLY the buckets the delta touches and writes new files
   for only those buckets. One observed pass over the delta finds them
   (and fills its cache); the merge itself is one Exchange, the bucket
-  repartition the files are written from.
+  repartition the files are written from. State rows keep the bucket id
+  their file path holds; only delta rows are hashed.
+- ``committed_rows(delta)`` reads back what the last merge committed
+  for the delta's keys, scanning only the buckets that commit wrote (a
+  semi-join on the key). The JDBC mirror applies those rows, so the
+  merge's (scn, seq) guard is the one place an image is chosen.
 - Per-batch cost is O(|delta| + touched_buckets * bucket_size), not
   O(|state|). With n_buckets sized so a bucket fits an executor
   (e.g. 100 TB / 65536 buckets ≈ 1.6 GB), a small delta touches a small
@@ -141,12 +146,14 @@ class ParquetStateTable:
     def read_internal(self, buckets: list[int] | None = None) -> DataFrame | None:
         """Internal state (tombstones + (scn, seq) watermark retained) of
         the committed version; ``buckets`` limits the scan to their files."""
-        manifest = self._manifest()
+        dirs = None if buckets is None else self._dirs(buckets)
+        return self._read(self._manifest(), dirs)
+
+    def _read(self, manifest: dict, dirs: set[str] | None) -> DataFrame | None:
         if manifest["schema"] is None:
             return None
         files = manifest["files"]
-        if buckets is not None:
-            dirs = self._dirs(buckets)
+        if dirs is not None:
             files = [f for f in files if os.path.dirname(f) in dirs]
         schema = T.StructType.fromJson(manifest["schema"])
         reader = self.spark.read.schema(schema.add(_BUCKET, T.IntegerType()))
@@ -215,15 +222,17 @@ class ParquetStateTable:
             buckets = sorted(seen["buckets"])
             if not buckets:
                 return
-            state = self.read_internal(buckets).drop(_BUCKET)
+            # the state side keeps the bucket id its file path holds; only
+            # the delta's rows are hashed
+            state = self.read_internal(buckets)
         # The merge's one shuffle puts whole buckets in min(cores, buckets
         # written) partitions, so each core writes its buckets' files.
         # Per-file cost dominates the write: n_buckets tasks (or the one
         # partition AQE would coalesce a small shuffle into) is slower.
         parts = max(1, min(self.spark.sparkContext.defaultParallelism, len(buckets)))
         merged = merge_into_state(
-            state, delta, self.key_cols, self.order_cols,
-            bucketing=(_BUCKET, self._bucket_col(), parts),
+            state, delta.withColumn(_BUCKET, self._bucket_col()),
+            self.key_cols, self.order_cols, bucketing=(_BUCKET, parts),
         )
         self._commit(manifest, merged, buckets)
 
@@ -284,6 +293,21 @@ class ParquetStateTable:
         return seen["n_dead"]
 
     # -- queries ----------------------------------------------------------
+
+    def committed_rows(self, frame: DataFrame) -> DataFrame | None:
+        """The committed rows of ``frame``'s keys, as ``current("rewrite")``
+        shows them, or None before the first commit. Only the buckets the
+        last commit wrote are scanned: right after ``merge_batch(frame)``
+        those are ``frame``'s buckets, so this is what the merge chose
+        for each of its keys (a stale row of ``frame`` reads as the newer
+        image that beat it)."""
+        manifest = self._manifest()
+        state = self._read(manifest, set(manifest["written"]))
+        if state is None:
+            return None
+        keys = F.broadcast(frame.select(*self.key_cols))
+        rows = state.drop(_BUCKET).join(keys, list(self.key_cols), "left_semi")
+        return publish(rows, "rewrite", self.order_cols)
 
     def current(self, delete_mode: str = "drop") -> DataFrame:
         """User-visible sink table (K3 delete modes: 'drop' removes

@@ -10,10 +10,16 @@ query_mix runs at sf0.01, so point SPARK_GRAFT_SF_DIR at the sf0.01
 testdata when the receipt must match the bench's derived
 widths/parameters.
 
-Besides the registry gates, ``state_merge`` dumps the frame
-``ParquetStateTable.merge_batch`` writes when it merges the fixed delta
-of ``tests/test_plans.py``'s state-merge plan pin into an 8-bucket
-table, built in a temporary directory that the file shows as ``<tmp>``.
+Besides the registry gates, two entries build their input in a
+temporary directory that the file shows as ``<tmp>``:
+
+- ``state_merge`` dumps the frame ``ParquetStateTable.merge_batch``
+  writes when it merges the fixed delta of ``tests/test_plans.py``'s
+  state-merge plan pin into an 8-bucket table;
+- ``mirror`` dumps the frame ``materialize_stream`` hands to
+  ``jdbc_sink.write_batch`` in the second of two micro-batches (40
+  creates, then 12 updates) mirrored into SQLite, explained inside the
+  batch while its delta is cached.
 
 Expression ids (`name#<n>`), `plan_id=<n>` and `RDD[<n>]` are
 renumbered in order of first appearance, and file-name UUIDs read
@@ -46,7 +52,13 @@ def normalize_ids(plan: str) -> str:
     return _ID.sub(sub, _UUID.sub("<uuid>", plan))
 
 
-def state_merge(spark, path):
+def _explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def state_merge(spark, path) -> str:
     """The frame a merge into an existing state table at ``path`` hands
     to its commit: the state-merge plan pin's seed and delta."""
     from olr_cdc_oracle_no_dbz_spark.streaming.state import ParquetStateTable
@@ -63,7 +75,56 @@ def state_merge(spark, path):
     table._commit = lambda manifest, rows, buckets: written.append(rows)
     table.merge_batch(delta)
     (rows,) = written
-    return rows
+    return _explain(rows)
+
+
+def mirror(spark, path) -> str:
+    """The frame the JDBC mirror writes for a stream's second batch."""
+    import decimal
+    import sqlite3
+
+    from olr_cdc_oracle_no_dbz_spark.streaming import (
+        ParquetStateTable,
+        jdbc_sink,
+        materialize_stream,
+    )
+    from tests.conftest import event, product_row, write_tx_file
+
+    src, db_path = os.path.join(path, "src"), os.path.join(path, "mirror.db")
+    rows = [product_row(i, f"p{i}", stock=i) for i in range(40)]
+    write_tx_file(src, "tx1.json", [event(100, "c", after=r, seq=r["id"]) for r in rows])
+    write_tx_file(src, "tx2.json", [
+        event(200, "u", before=r, after=dict(r, stock=7), seq=r["id"]) for r in rows[:12]
+    ])
+    with sqlite3.connect(db_path) as db:
+        db.execute(
+            "CREATE TABLE products (id INT PRIMARY KEY, name VARCHAR(100),"
+            " description VARCHAR(500), price VARCHAR(20), stock INT,"
+            " created_date VARCHAR(30), updated_date VARCHAR(30))"
+        )
+    plans, real = [], jdbc_sink.write_batch
+
+    def connect():
+        sqlite3.register_adapter(decimal.Decimal, str)  # the price column
+        return sqlite3.connect(db_path)
+
+    def capture(batch_df, *args, **kwargs):
+        plans.append(_explain(batch_df))
+        return real(batch_df, *args, **kwargs)
+
+    jdbc_sink.write_batch = capture
+    try:
+        materialize_stream(
+            spark, src, ParquetStateTable(spark, os.path.join(path, "state"), n_buckets=8),
+            os.path.join(path, "ckpt"), max_files_per_trigger=1,
+            jdbc_sink={"connection_factory": connect, "table": "products"},
+        ).awaitTermination()
+    finally:
+        jdbc_sink.write_batch = real
+    return plans[-1]
+
+
+_BUILT = {"state_merge": state_merge, "mirror": mirror}
 
 
 def main() -> int:
@@ -83,15 +144,11 @@ def main() -> int:
     qs = queries()
     for name in names:
         with tempfile.TemporaryDirectory() as tmp:
-            if name == "state_merge":
-                df = state_merge(spark, tmp)
+            if name in _BUILT:
+                plan = _BUILT[name](spark, tmp)
             else:
-                df = qs[name](spark, sf_dir)
-            plan = normalize_ids(
-                df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"
-                )
-            ).replace(tmp, "<tmp>")
+                plan = _explain(qs[name](spark, sf_dir))
+            plan = normalize_ids(plan).replace(tmp, "<tmp>")
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import sqlite3
 
+import pytest
 from pyspark.sql import functions as F
 
 from olr_cdc_oracle_no_dbz_spark.cdc.materialize import latest_state
@@ -102,8 +103,8 @@ def test_change_stream_to_jdbc_sink_with_evolution(spark, tmp_path):
 
 def test_materialize_stream_with_jdbc_mirror(spark, tmp_path):
     """The full configured path with the reference's literal sink: one
-    materialize_stream call keeps the parquet state AND mirrors every
-    compacted batch into an RDBMS (upsert + tombstone delete), through
+    materialize_stream call keeps the parquet state AND mirrors each
+    batch's committed rows into an RDBMS (upsert + tombstone delete), through
     the same insert→update→delete protocol the reference documents."""
     from olr_cdc_oracle_no_dbz_spark.streaming import (
         ParquetStateTable,
@@ -155,6 +156,33 @@ def test_materialize_stream_with_jdbc_mirror(spark, tmp_path):
     assert got == [(2, 3)]
 
 
+def _mirror_db(db_path: str) -> None:
+    with sqlite3.connect(db_path) as db:
+        db.execute(
+            "CREATE TABLE products (id INT PRIMARY KEY, name VARCHAR(100),"
+            " description VARCHAR(500), price VARCHAR(20), stock INT,"
+            " created_date VARCHAR(30), updated_date VARCHAR(30))"
+        )
+
+
+def _sqlite_factory(db_path: str):
+    def factory():
+        import decimal
+
+        sqlite3.register_adapter(decimal.Decimal, str)
+        return sqlite3.connect(db_path, timeout=60)
+
+    return factory
+
+
+def _stock(state, db_path: str) -> tuple[list, list]:
+    """(id, stock) of the live rows in ``current()`` and in the mirror."""
+    live = sorted((r["id"], r["stock"]) for r in state.current().collect())
+    with sqlite3.connect(db_path) as db:
+        mirror = db.execute("SELECT id, stock FROM products ORDER BY id").fetchall()
+    return live, mirror
+
+
 def test_materialize_stream_keeps_sink_columns(spark, tmp_path):
     """After a streamed batch, ``current()`` and the mirror have exactly
     the row image's columns: the change-event ``op`` is bookkeeping, not
@@ -171,26 +199,14 @@ def test_materialize_stream_keeps_sink_columns(spark, tmp_path):
     db_path = str(tmp_path / "mirror.db")
     image = ["id", "name", "description", "price", "stock",
              "created_date", "updated_date"]
-    with sqlite3.connect(db_path) as db:
-        db.execute(
-            "CREATE TABLE products (id INT PRIMARY KEY, name VARCHAR(100),"
-            " description VARCHAR(500), price VARCHAR(20), stock INT,"
-            " created_date VARCHAR(30), updated_date VARCHAR(30))"
-        )
-
-    def factory():
-        import decimal
-
-        sqlite3.register_adapter(decimal.Decimal, str)
-        return sqlite3.connect(db_path, timeout=60)
-
+    _mirror_db(db_path)
     state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=4)
     r1 = product_row(1, "Test Product", "99.99", 10)
     write_tx_file(src, "tx1.json", [event(100, "c", after=r1)])
     write_tx_file(src, "tx2.json", [event(101, "u", before=r1, after=dict(r1, stock=3))])
     q = materialize_stream(
         spark, src, state, ckpt,
-        jdbc_sink={"connection_factory": factory, "table": "products"},
+        jdbc_sink={"connection_factory": _sqlite_factory(db_path), "table": "products"},
     )
     q.awaitTermination(120)
 
@@ -199,3 +215,80 @@ def test_materialize_stream_keeps_sink_columns(spark, tmp_path):
         cols = [r[1] for r in db.execute("PRAGMA table_info(products)")]
         assert cols == image
         assert db.execute("SELECT id, stock FROM products").fetchall() == [(1, 3)]
+
+
+def test_materialize_stream_mirror_ignores_stale_redelivery(spark, tmp_path):
+    """A stale redelivery (an scn-100 create arriving after the scn-200
+    update of the same key, in a later batch) loses the state merge's
+    (scn, seq) guard, and the mirror applies what that merge committed:
+    both keep the scn-200 image."""
+    from olr_cdc_oracle_no_dbz_spark.streaming import (
+        ParquetStateTable,
+        materialize_stream,
+    )
+    from tests.conftest import event, product_row
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    db_path = str(tmp_path / "mirror.db")
+    _mirror_db(db_path)
+    sink = {"connection_factory": _sqlite_factory(db_path), "table": "products"}
+    state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=4)
+    r1 = product_row(1, "Test Product", "99.99", 10)
+    create = [event(100, "c", after=r1)]
+    write_tx_file(src, "tx1.json", create)
+    write_tx_file(src, "tx2.json", [event(200, "u", before=r1, after=dict(r1, stock=77))])
+    materialize_stream(spark, src, state, ckpt, jdbc_sink=sink).awaitTermination(120)
+    assert _stock(state, db_path) == ([(1, 77)], [(1, 77)])
+
+    write_tx_file(src, "tx3.json", create)  # the scn-100 create again
+    materialize_stream(spark, src, state, ckpt, jdbc_sink=sink).awaitTermination(120)
+    assert _stock(state, db_path) == ([(1, 77)], [(1, 77)])
+
+
+def test_materialize_stream_mirror_crash_after_state_commit(spark, tmp_path):
+    """The mirror's connection fails once after a batch's state commit,
+    which fails the query. A restart on the same checkpoint re-runs the
+    batch: the merge is a no-op under its guard, and the mirror then
+    equals ``current()``."""
+    from pyspark.errors import StreamingQueryException
+
+    from olr_cdc_oracle_no_dbz_spark.streaming import (
+        ParquetStateTable,
+        materialize_stream,
+    )
+    from tests.conftest import event, product_row
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    db_path = str(tmp_path / "mirror.db")
+    _mirror_db(db_path)
+    healthy = _sqlite_factory(db_path)
+    failures = [RuntimeError("mirror connection lost")]
+
+    def flaky():
+        if failures:
+            raise failures.pop()
+        return healthy()
+
+    def run(factory):
+        sink = {"connection_factory": factory, "table": "products"}
+        materialize_stream(spark, src, state, ckpt, jdbc_sink=sink).awaitTermination(120)
+
+    state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=4)
+    r1 = product_row(1, "Test Product", "99.99", 10)
+    r2 = product_row(2, "Other", "5.00", 3)
+    write_tx_file(src, "tx1.json", [event(100, "c", after=r1), event(100, "c", after=r2, seq=2)])
+    run(healthy)
+    assert _stock(state, db_path) == ([(1, 10), (2, 3)], [(1, 10), (2, 3)])
+
+    write_tx_file(
+        src,
+        "tx2.json",
+        [event(200, "u", before=r1, after=dict(r1, stock=77)), event(200, "d", before=r2, seq=2)],
+    )
+    with pytest.raises(StreamingQueryException, match="mirror connection lost"):
+        run(flaky)
+    # the state committed the batch; the mirror did not see it
+    assert _stock(state, db_path) == ([(1, 77)], [(1, 10), (2, 3)])
+
+    run(healthy)
+    assert _stock(state, db_path) == ([(1, 77)], [(1, 77)])

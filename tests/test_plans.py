@@ -742,7 +742,7 @@ def test_state_merge_plan_one_exchange_the_bucket_repartition(
     min(cores, buckets touched) partitions, and the LWW over state ∪ raw
     delta groups by (bucket_id, key) inside it, with no Exchange on the
     key. The bucket files are still written by every core instead of one
-    coalesced task."""
+    coalesced task. Only the delta's rows are hashed to a bucket."""
     import re
 
     from olr_cdc_oracle_no_dbz_spark.streaming.state import ParquetStateTable
@@ -774,3 +774,6 @@ def test_state_merge_plan_one_exchange_the_bucket_repartition(
         plan,
     ), plan
     assert "hashpartitioning(id" not in plan, plan
+    # the state rows keep the bucket id their file path holds: the only
+    # hash is the delta's
+    assert plan.count("xxhash64(") == 1, plan

@@ -212,6 +212,7 @@ def test_jdbc_sink_schema_evolution_live(spark, tmp_path):
     import sqlite3
 
     from olr_cdc_oracle_no_dbz_spark.streaming.jdbc_sink import (
+        _stage_ddl,
         evolve_statements,
     )
 
@@ -243,10 +244,15 @@ def test_jdbc_sink_schema_evolution_live(spark, tmp_path):
 
     # idempotent: evolving again is a no-op, case-insensitively
     assert evolve_statements("products", ["ID", "STOCK", "COLOR"], batch.schema) == []
-    # unknown types fail fast instead of guessing DDL
+    # unknown types fail fast instead of guessing DDL, in the ALTER and
+    # in the parallel mode's staging table alike
     arr = spark.createDataFrame([([1],)], "xs array<int>")
-    with pytest.raises(TypeError, match="no SQL mapping"):
-        evolve_statements("products", ["id"], arr.schema)
+    for ddl in (
+        lambda: evolve_statements("products", ["id"], arr.schema),
+        lambda: _stage_ddl("products", arr.schema, "postgresql"),
+    ):
+        with pytest.raises(TypeError, match="no SQL mapping"):
+            ddl()
 
 
 def test_write_batch_parallel_mode_matches_funnel(spark, tmp_path):
