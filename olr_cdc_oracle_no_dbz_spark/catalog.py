@@ -15,7 +15,6 @@ per-table memo in the engine keys on (``TableMemo``).
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,45 +24,6 @@ from olr_cdc_oracle_no_dbz_spark.schemas import TESTDATA_TABLES
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def read_parquet_retrying(
-    reader, path: str, attempts: int = 5, delay_s: float = 0.1
-):
-    """``reader(path)`` with retry-on-missing-path (VERDICT r5 item 8).
-
-    ``scale.compact_small_files`` swaps a table directory via two
-    ``os.replace`` calls; between them the live path is absent for
-    microseconds. A reader that lands exactly in that window gets
-    PATH_NOT_FOUND for a table that exists before and after — so
-    missing-path errors here back off briefly and retry instead of
-    failing the query. Genuinely absent tables still raise (the final
-    attempt re-raises), and non-path errors propagate immediately.
-    ``reader`` is any ``path -> DataFrame`` callable, so the wrapper is
-    testable without racing a real rename."""
-    from pyspark.errors import AnalysisException
-
-    for i in range(attempts):
-        try:
-            return reader(path)
-        except AnalysisException as e:
-            msg = str(e)
-            if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
-                raise
-            if i == attempts - 1:
-                raise
-            time.sleep(delay_s)
-
-
-def write_atomic(path: str, text: str) -> None:
-    """Replace ``path`` by ``text`` with one ``os.replace``: a reader
-    sees the old content or the new, never a partial file. The temp file
-    is a dot-file in the same directory, so the rename stays on one
-    filesystem and directory readers skip it."""
-    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(text)
-    os.replace(tmp, path)
-
-
 def table_fingerprint(sf_dir: str, name: str) -> tuple[str, tuple | None]:
     """``(path, stat)`` for ``<sf_dir>/<name>.parquet``: the absolute path
     and ``(relpath, size, mtime_ns)`` of every file under it, nested
@@ -71,7 +31,7 @@ def table_fingerprint(sf_dir: str, name: str) -> tuple[str, tuple | None]:
     one answer to "has this table changed" (ADVICE r14): the row-count,
     schema and training memos all key on it. A few ``os.stat`` calls,
     no Spark job. ``stat`` is None when a file vanishes between the
-    listing and its ``stat`` (a directory swap in flight); ``TableMemo``
+    listing and its ``stat`` (a table being rewritten); ``TableMemo``
     treats that as a miss."""
     path = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
     try:
@@ -156,10 +116,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     fp = table_fingerprint(sf_dir, name)
     schema = _TABLE_MEMO.get(fp, "schema")
     if schema is None:
-        df = read_parquet_retrying(spark.read.parquet, fp[0])
+        df = spark.read.parquet(fp[0])
         _TABLE_MEMO.put(fp, "schema", df.schema)
     else:
-        df = read_parquet_retrying(spark.read.schema(schema).parquet, fp[0])
+        df = spark.read.schema(schema).parquet(fp[0])
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]

@@ -1,18 +1,24 @@
-"""Scale techniques: salted joins for skew, bucketed tables for
-shuffle-free co-located joins (SURVEY.md §4 partitioned-parallelism row;
+"""Scale techniques: salted joins for skew, and the physical layouts a
+100 TB table is written in (SURVEY.md §4 partitioned-parallelism row;
 the Kafka-partition ≙ shuffle-partition analogy).
 
 AQE's skew-join splitting (on in session.py) handles most skew at
 runtime; ``salted_join`` is the explicit fallback for pathological hot
-keys (a single key larger than an executor). ``write_bucketed`` /
-``bucketed_table`` pre-shuffle once at write time so every later join
-or aggregation on the bucket key runs with ZERO exchanges — the
-pattern for a 100 TB fact table joined repeatedly on the same key.
+keys (a single key larger than an executor). ``write_bucketed``
+pre-shuffles once at write time so every later join or aggregation on
+the bucket key of the ``spark.table`` read back runs with ZERO
+exchanges — the pattern for a 100 TB fact table joined repeatedly on
+the same key. ``write_range_sorted``, ``write_partitioned`` and
+``write_zorder_sorted`` lay files out for file- and directory-level
+pruning. Sinks that grow by appends keep their file count down by
+rewriting through their own manifest commit (``manifest.py``:
+``ParquetStateTable.compact``, ``streaming.dedup.compact_index``), never
+by swapping directories under a reader.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _SALT = "__salt"
@@ -73,12 +79,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def bucketed_table(spark: SparkSession, table: str) -> DataFrame:
-    """Read back a bucketed table (bucket metadata comes from the
-    catalog, which is what makes the exchange-free plan possible)."""
-    return spark.table(table)
-
-
 def write_range_sorted(
     df: DataFrame,
     path: str,
@@ -123,103 +123,6 @@ def write_partitioned(
     z-order WITHIN partitions for the fine-grained layer
     (write_range_sorted / workload.layout.zvalue)."""
     df.write.format("parquet").mode(mode).partitionBy(*partition_cols).save(path)
-
-
-def _partition_cols_of(path: str) -> list[str]:
-    """Hive partition columns of a parquet directory, inferred from the
-    ``col=value`` directory segments on the path to the first data file
-    (exactly the inference spark.read.parquet itself performs)."""
-    import glob as _glob
-    import os
-
-    for f in sorted(
-        _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    ):
-        rel = os.path.relpath(f, path)
-        cols = [
-            seg.split("=", 1)[0]
-            for seg in rel.split(os.sep)[:-1]
-            if "=" in seg
-        ]
-        if cols:
-            return cols
-        return []
-    return []
-
-
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Rewrite a parquet directory into ~target-sized files and return
-    the new file count — the maintenance pass every long-running
-    streaming sink needs (each micro-batch writes at least one file per
-    touched partition; a month of 30 s triggers yields ~90k tiny files
-    whose open/footer overhead dominates scans long before data volume
-    does). Sizing uses the CURRENT on-disk bytes, so compressed size —
-    not row count — decides the file count.
-
-    Hive-partitioned layouts (``path/col=value/...``) are preserved:
-    partition directories are detected from the on-disk layout and the
-    rewrite goes through ``partitionBy`` on the same columns after a
-    ``repartition`` on them, collapsing each partition directory to one
-    file (a single partition-value larger than the target stays one
-    file — per-directory splitting would need a salt and is not worth
-    losing 1-file-per-dir pruning for). Unpartitioned layouts use
-    ``coalesce`` (glues existing partitions, no shuffle).
-
-    Crash safety is swap-via-rename, never delete-then-rename: the new
-    table is written to ``.compact.tmp``, the live directory is renamed
-    aside to ``.compact.old``, the tmp renamed into place, and only
-    then the old data removed — at every instant a crash leaves either
-    the old or the new complete table reachable (the one non-atomic
-    window renames the live dir away for the microseconds between the
-    two ``os.replace`` calls; readers mid-listing can race that, but no
-    crash point loses data). Readers absorb that window by retrying
-    missing-path errors — ``catalog.read_parquet_retrying`` (used by
-    ``catalog.load_table``) backs off ~100 ms and re-reads, far longer
-    than the rename gap; readers that bypass the catalog should either
-    do the same or schedule compaction in a maintenance window."""
-    import glob as _glob
-    import os
-    import shutil
-
-    files = [
-        f
-        for f in _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total // target_file_bytes))
-    part_cols = _partition_cols_of(path)
-    tmp = path.rstrip("/") + ".compact.tmp"
-    old = path.rstrip("/") + ".compact.old"
-    shutil.rmtree(tmp, ignore_errors=True)  # stale leftovers from a crash
-    shutil.rmtree(old, ignore_errors=True)
-    df = spark.read.parquet(path)
-    if part_cols:
-        (
-            df.repartition(*[F.col(c) for c in part_cols])
-            .write.format("parquet")
-            .mode("overwrite")
-            .partitionBy(*part_cols)
-            .save(tmp)
-        )
-    else:
-        df.coalesce(int(n_out)).write.format("parquet").mode("overwrite").save(tmp)
-    os.replace(path, old)
-    os.replace(tmp, path)
-    shutil.rmtree(old)
-    return len(
-        [
-            f
-            for f in _glob.glob(
-                os.path.join(path, "**", "*.parquet"), recursive=True
-            )
-            if os.path.isfile(f)
-        ]
-    )
 
 
 def write_zorder_sorted(

@@ -40,8 +40,8 @@ import re
 
 from pyspark.sql import types as T
 
-from olr_cdc_oracle_no_dbz_spark.catalog import write_atomic
 from olr_cdc_oracle_no_dbz_spark.cdc.materialize import _wider_type
+from olr_cdc_oracle_no_dbz_spark.manifest import write_atomic
 from olr_cdc_oracle_no_dbz_spark.serde import avro_schema_for
 
 _V_RE = re.compile(r"^v(\d+)\.spark\.json$")

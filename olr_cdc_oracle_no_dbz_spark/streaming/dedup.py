@@ -13,40 +13,49 @@ Per micro-batch:
 2. candidates = batch bands ⋈ index bands (equi-join on
    (band_idx, band_hash)); the index stores bands PRECOMPUTED and
    hash-partitioned by band-hash bucket (N_IDX_BUCKETS dirs), so the
-   lookup reads only the batch's touched buckets — directory-level
-   partition pruning for trickle batches, graceful full-scan +
-   broadcast semi-join for large ones — and never re-derives band
-   hashes over the corpus;
+   lookup reads only the committed files of the batch's touched
+   buckets — bucket-level pruning for trickle batches, graceful
+   full-scan + broadcast semi-join for large ones — and never
+   re-derives band hashes over the corpus;
 3. verify candidates by signature agreement: estimated Jaccard =
    fraction of the 16 minhash slots that agree (signatures are INLINE
    on the band rows — verification needs no second corpus lookup);
    ≥ threshold ⇒ dup;
 4. in-batch dups resolved the same way (keep lowest doc_id);
-5. survivors' band rows are APPENDED to their bucket partitions (the
-   index only grows; compact_small_files handles file-count
-   maintenance per bucket).
+5. survivors and their band rows are APPENDED to ``out_dir`` and to
+   their index buckets in ONE commit (the index only grows;
+   ``compact_index`` folds each bucket's files into one).
 
-Exactly-once: the index append is guarded per batch_id (a batch that
-retries after writing skips the second write), the same idempotence
-contract as streaming/state.py.
+Exactly-once: both sinks commit through one manifest in ``index_dir``
+(``manifest.py``, the commit of streaming/state.py), which lists the
+``out`` and the ``index`` files and carries the last applied batch id.
+Readers see whole batches only: the survivors through
+``read_survivors``, the accepted index through ``dedupe_batch``. A
+crash before the manifest swap leaves the previous batch; a retried
+batch recomputes against that same index, and a retry of a committed
+batch is a no-op.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
+
+from olr_cdc_oracle_no_dbz_spark.checkpointing import truncate_lineage
+from olr_cdc_oracle_no_dbz_spark.manifest import commit, load, observed, read
 
 N_PERMS = 16
 N_BANDS = 4
 _SHINGLE_K = 3
 #: hash-partition fan-out of the persisted band index. Lookup cost per
 #: micro-batch is bounded by the batch's DISTINCT band-hash buckets:
-#: a trickle batch of ~20 docs touches ≤80 of 256 partitions, so the
-#: corpus scan prunes ~70% at the directory level; a huge batch
+#: a trickle batch of ~20 docs touches ≤80 of 256 buckets, so the
+#: corpus scan skips the files of ~70% of them; a huge batch
 #: degrades gracefully to a full scan feeding a broadcast semi-join
 #: (the corpus is never shuffled either way).
 N_IDX_BUCKETS = 256
@@ -120,21 +129,97 @@ def _index_rows(sigs: DataFrame) -> DataFrame:
     )
 
 
-def _index_has_data(index_dir: str) -> bool:
-    """True iff the live index holds published band-partition dirs.
-    Staged (``_stage_*``) and marker (``_batch_*``) entries are
-    underscore-prefixed — hidden from Spark's reader and skipped here,
-    so an in-flight stage never counts as accepted corpus."""
-    if not os.path.isdir(index_dir):
-        return False
-    for entry in os.listdir(index_dir):
-        if entry.startswith("bucket="):
-            sub = os.path.join(index_dir, entry)
-            if os.path.isdir(sub) and any(
-                f.endswith(".parquet") for f in os.listdir(sub)
-            ):
-                return True
-    return False
+def _sink(
+    spark: SparkSession, index_dir: str, manifest: dict, sink: str, buckets=None
+) -> DataFrame | None:
+    """The committed files of ``sink`` ("out", or "index" pruned to
+    ``buckets`` when given) under their manifest schema, or None when
+    there are none. Index files live in ``bucket=`` directories, the
+    survivors in the one directory beside them."""
+    if manifest["schema"] is None:
+        return None
+    dirs = {os.path.dirname(f) for f in manifest["files"]}
+    index = {d for d in dirs if d.startswith("bucket=")}
+    if sink == "out":
+        dirs -= index
+        base = next(iter(dirs), ".")
+    else:
+        dirs, base = index, "."
+        if buckets is not None:
+            dirs &= {f"bucket={b}" for b in buckets}
+    if not dirs:
+        return None
+    schema = T.StructType.fromJson(manifest["schema"][sink])
+    return read(spark, index_dir, manifest, schema, base, dirs)
+
+
+def _dedupe(
+    spark: SparkSession,
+    batch: DataFrame,
+    sigs: DataFrame,
+    index_dir: str,
+    manifest: dict,
+    threshold: float,
+) -> tuple[DataFrame, list[int]]:
+    """The survivors of ``batch`` (lazy; ``sigs`` are its persisted
+    signatures) against the index ``manifest`` commits, and the index
+    buckets the batch's bands touch."""
+    bands = _bands(sigs)
+    # one pass fills the signature cache and collects the batch's
+    # distinct band buckets (bounded: ≤4·|batch|, capped at
+    # N_IDX_BUCKETS — the same bounded-collect shape as
+    # ParquetStateTable's touched-bucket prune), which pick the
+    # committed index files the scan reads. Degradation is graceful by
+    # construction: a batch that touches EVERY bucket collects exactly
+    # N_IDX_BUCKETS ints and scans the whole index, never a driver
+    # blow-up (pinned: tests/test_stream_dedup.py::
+    # test_full_bucket_touch_degrades_to_full_index_scan)
+    touched = sorted(observed(bands, buckets=F.collect_set(_bucket_col()))["buckets"])
+    # --- within the batch (keep lowest doc_id of a dup pair) ---
+    pair = (
+        bands.alias("x")
+        .join(
+            bands.alias("y"),
+            (F.col("x.band_idx") == F.col("y.band_idx"))
+            & (F.col("x.band_hash") == F.col("y.band_hash"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .select(
+            F.col("x.doc_id").alias("keep_id"),
+            F.col("y.doc_id").alias("drop_id"),
+        )
+    )
+    drops = (
+        pair.join(sigs.alias("a"), pair["keep_id"] == F.col("a.doc_id"))
+        .join(sigs.alias("b"), pair["drop_id"] == F.col("b.doc_id"))
+        .filter(_sig_agreement("a", "b") >= threshold)
+        .select(F.col("drop_id").alias("doc_id"))
+    )
+    # --- against the accepted index (committed files only) ---
+    idx = _sink(spark, index_dir, manifest, "index", touched)
+    if idx is not None:
+        cand = (
+            bands.alias("nb")
+            .join(
+                idx.alias("ib"),
+                (F.col("nb.band_idx") == F.col("ib.band_idx"))
+                & (F.col("nb.band_hash") == F.col("ib.band_hash")),
+            )
+            .select(
+                F.col("nb.doc_id").alias("new_id"),
+                *[F.col(f"ib.mh{i}").alias(f"omh{i}") for i in range(N_PERMS)],
+            )
+        )
+        agree = sum(
+            (F.col(f"n.mh{i}") == F.col(f"omh{i}")).cast("int")
+            for i in range(N_PERMS)
+        ) / F.lit(float(N_PERMS))
+        drops = drops.unionAll(
+            cand.join(sigs.alias("n"), cand["new_id"] == F.col("n.doc_id"))
+            .filter(agree >= threshold)
+            .select(F.col("new_id").alias("doc_id"))
+        )
+    return batch.join(drops.distinct(), "doc_id", "left_anti"), touched
 
 
 def dedupe_batch(
@@ -143,90 +228,15 @@ def dedupe_batch(
     index_dir: str,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Survivors of one batch: docs that near-dup neither the index
-    nor an earlier (lower doc_id) batch survivor. Returns the batch
-    rows to keep; does NOT write the index."""
+    """Survivors of one batch: docs that near-dup neither the committed
+    index nor an earlier (lower doc_id) batch survivor. Returns the
+    batch rows to keep; does NOT write the index. Only the index files
+    the manifest lists are read, pruned to the batch's touched buckets,
+    so a crashed attempt's rows never count as accepted corpus."""
     sigs = _signatures(batch).persist()
     try:
-        sigs.count()
-        bands = _bands(sigs)
-        # --- against the accepted index ---
-        dup_vs_index = None
-        if _index_has_data(index_dir):
-            # the batch's distinct band buckets (bounded: ≤4·|batch|,
-            # capped at N_IDX_BUCKETS — the same bounded-collect shape
-            # as ParquetStateTable's touched-bucket prune) drive
-            # directory-level partition pruning of the index scan.
-            # Degradation is graceful by construction: a batch that
-            # touches EVERY bucket collects exactly N_IDX_BUCKETS ints
-            # and the isin filter passes the whole index — a full-index
-            # scan, never a driver blow-up (pinned: tests/
-            # test_stream_dedup.py::test_full_bucket_touch_degrades_
-            # to_full_index_scan)
-            touched = [
-                r[0]
-                for r in bands.select(_bucket_col().alias("bucket"))
-                .distinct()
-                .collect()
-            ]
-            idx = spark.read.parquet(index_dir).filter(
-                F.col("bucket").isin(touched)
-            )
-            cand = (
-                bands.alias("nb")
-                .join(
-                    idx.alias("ib"),
-                    (F.col("nb.band_idx") == F.col("ib.band_idx"))
-                    & (F.col("nb.band_hash") == F.col("ib.band_hash")),
-                )
-                .select(
-                    F.col("nb.doc_id").alias("new_id"),
-                    F.col("ib.doc_id").alias("old_id"),
-                    *[
-                        F.col(f"ib.mh{i}").alias(f"omh{i}")
-                        for i in range(N_PERMS)
-                    ],
-                )
-                .distinct()
-            )
-            agree = sum(
-                (F.col(f"n.mh{i}") == F.col(f"omh{i}")).cast("int")
-                for i in range(N_PERMS)
-            ) / F.lit(float(N_PERMS))
-            verified = (
-                cand.join(sigs.alias("n"), cand["new_id"] == F.col("n.doc_id"))
-                .filter(agree >= threshold)
-                .select(F.col("new_id").alias("doc_id"))
-                .distinct()
-            )
-            dup_vs_index = verified
-        # --- within the batch (keep lowest doc_id of a dup pair) ---
-        nb = _bands(sigs)
-        pair = (
-            nb.alias("x")
-            .join(
-                nb.alias("y"),
-                (F.col("x.band_idx") == F.col("y.band_idx"))
-                & (F.col("x.band_hash") == F.col("y.band_hash"))
-                & (F.col("x.doc_id") < F.col("y.doc_id")),
-            )
-            .select(
-                F.col("x.doc_id").alias("keep_id"),
-                F.col("y.doc_id").alias("drop_id"),
-            )
-            .distinct()
-        )
-        in_batch = (
-            pair.join(sigs.alias("a"), pair["keep_id"] == F.col("a.doc_id"))
-            .join(sigs.alias("b"), pair["drop_id"] == F.col("b.doc_id"))
-            .filter(_sig_agreement("a", "b") >= threshold)
-            .select(F.col("drop_id").alias("doc_id"))
-            .distinct()
-        )
-        drops = in_batch if dup_vs_index is None else in_batch.unionAll(
-            dup_vs_index
-        ).distinct()
-        return batch.join(drops, "doc_id", "left_anti")
+        manifest = load(index_dir, index_dir)
+        return _dedupe(spark, batch, sigs, index_dir, manifest, threshold)[0]
     finally:
         sigs.unpersist()
 
@@ -238,78 +248,60 @@ def apply_batch(
     out_dir: str,
     index_dir: str,
     threshold: float = 0.5,
-    _fault=None,
 ) -> None:
     """Exactly-once apply of one micro-batch across BOTH sinks (the
     survivor corpus in ``out_dir`` and the signature index in
-    ``index_dir``), closing the dual-sink crash window VERDICT r5
-    item 4 flagged. Stage-then-publish under one batch marker:
-
-    1. STAGE: survivors and their signatures are written to
-       ``index_dir/_stage_{batch_id}/{out,index}`` (underscore-prefixed
-       — invisible to the live index reader), then a ``_COMPLETE``
-       sentinel seals the stage. A crash here leaves the live sinks
-       untouched; the retry discards the partial stage and recomputes
-       (safe — ``dedupe_batch`` reads only the live, unmodified index).
-    2. PUBLISH: staged part files are MOVED into the live dirs. Names
-       are Spark's part-UUIDs (unique, never colliding with earlier
-       batches), and already-moved files are skipped, so re-running the
-       publish after a crash moves exactly the remainder — idempotent.
-       A sealed stage is never recomputed, so a crash mid-publish can
-       not produce a second copy of a survivor file under a new UUID.
-    3. MARK: the ``_batch_{batch_id}`` marker commits the batch; a
-       retried batch that finds it is a no-op (stale stage cleaned up).
-
-    ``_fault(point)`` is a test-only crash-injection hook
-    (tests/test_stream_dedup.py kills the apply at each window and
-    proves the retry yields no duplicate out_dir rows).
-    """
-    fault = _fault or (lambda point: None)
-    marker = os.path.join(index_dir, f"_batch_{batch_id}")
-    stage = os.path.join(index_dir, f"_stage_{batch_id}")
-    if os.path.exists(marker):
-        shutil.rmtree(stage, ignore_errors=True)  # crashed post-commit
+    ``index_dir``): the survivors and their index rows are appended and
+    made visible together by one manifest commit in ``index_dir``
+    carrying ``batch_id``. A batch whose id the manifest already carries
+    is a retry of a committed batch and returns at once; any other retry
+    recomputes against the committed index, which a crashed attempt
+    never changed."""
+    manifest = load(index_dir, index_dir)
+    if manifest.get("batch_id", -1) >= batch_id:
         return
-    complete = os.path.join(stage, "_COMPLETE")
-    if not os.path.exists(complete):
-        shutil.rmtree(stage, ignore_errors=True)  # unsealed partial stage
-        kept = dedupe_batch(spark, batch, index_dir, threshold).persist()
-        try:
-            if kept.count() > 0:
-                kept.write.parquet(os.path.join(stage, "out"))
-                fault("between_stage_writes")
-                (
-                    _index_rows(_signatures(kept))
-                    .write.partitionBy("bucket")
-                    .parquet(os.path.join(stage, "index"))
-                )
-            os.makedirs(stage, exist_ok=True)
-            fault("before_seal")
-            open(complete, "w").close()
-        finally:
-            kept.unpersist()
-    fault("before_publish")
-    for sub, dest in (("out", out_dir), ("index", index_dir)):
-        src = os.path.join(stage, sub)
-        if not os.path.isdir(src):
-            continue
-        os.makedirs(dest, exist_ok=True)
-        # moves preserve the bucket=NN partition layout of the index;
-        # Spark part-file names are unique per batch, so each move is
-        # idempotent under a publish retry
-        for root, dirs, files in os.walk(src):
-            dirs.sort()
-            rel = os.path.relpath(root, src)
-            for f in sorted(files):
-                if not f.endswith(".parquet") or f.startswith(("_", ".")):
-                    continue
-                dest_dir = dest if rel == "." else os.path.join(dest, rel)
-                os.makedirs(dest_dir, exist_ok=True)
-                os.replace(os.path.join(root, f), os.path.join(dest_dir, f))
-                fault(f"mid_publish_{sub}")
-    os.makedirs(index_dir, exist_ok=True)
-    open(marker, "w").close()
-    shutil.rmtree(stage, ignore_errors=True)
+    sigs = _signatures(batch).persist()
+    try:
+        kept, touched = _dedupe(spark, batch, sigs, index_dir, manifest, threshold)
+        # the survivors, materialized once without lineage: a cache whose
+        # plan scans the index would be re-listed by the index write
+        kept = truncate_lineage(kept)
+        rows = _index_rows(sigs.join(kept.select("doc_id"), "doc_id", "left_semi"))
+
+        def write() -> None:
+            if not kept.isEmpty():
+                kept.write.mode("append").parquet(out_dir)
+            rows.write.mode("append").partitionBy("bucket").parquet(index_dir)
+
+        # the survivors' bands are among the batch's: their buckets are
+        # a subset of the touched ones
+        written = {os.path.relpath(out_dir, index_dir)}
+        written |= {f"bucket={b}" for b in touched}
+        schema = {"out": kept.schema.jsonValue(), "index": rows.schema.jsonValue()}
+        commit(index_dir, manifest, write, written, replace=False,
+               schema=schema, batch_id=batch_id)
+    finally:
+        sigs.unpersist()
+
+
+def compact_index(spark: SparkSession, index_dir: str) -> int:
+    """Replace the files of every index bucket that holds more than one
+    live file by one file, in one commit (the maintenance each bucket
+    needs: every batch that touches it adds a file). Returns the number
+    of buckets rewritten."""
+    manifest = load(index_dir, index_dir)
+    files = Counter(os.path.dirname(f) for f in manifest["files"])
+    buckets = [int(d[len("bucket="):]) for d, n in files.items()
+               if d.startswith("bucket=") and n > 1]
+    if not buckets:
+        return 0
+    rows = _sink(spark, index_dir, manifest, "index", buckets).repartition("bucket")
+    commit(
+        index_dir, manifest,
+        lambda: rows.write.mode("append").partitionBy("bucket").parquet(index_dir),
+        {f"bucket={b}" for b in buckets}, replace=True,
+    )
+    return len(buckets)
 
 
 def incremental_near_dedup(
@@ -324,10 +316,11 @@ def incremental_near_dedup(
     """Streaming wrapper: watch ``source_dir`` for JSON-lines document
     files ({doc_id, text}), write deduplicated survivors to ``out_dir``
     and their signatures to the ``index_dir`` MinHash index.
-    ``apply_batch``'s stage/publish/mark protocol makes the dual-sink
-    append exactly-once under foreachBatch retries — every crash
-    window either recomputes from an untouched live state or resumes
-    an idempotent file-move publish."""
+    ``apply_batch``'s one manifest commit per batch makes the dual-sink
+    append exactly-once under foreachBatch retries: a crash before the
+    commit leaves the previous batch, which the retry recomputes from,
+    and a committed batch is never applied twice. Read the survivors
+    with ``read_survivors``."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         apply_batch(spark, batch, batch_id, out_dir, index_dir, threshold)
@@ -343,3 +336,13 @@ def incremental_near_dedup(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def read_survivors(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The survivors of every committed batch of the sinks whose manifest
+    is in ``index_dir``: whole batches only, never a file of a crashed
+    attempt. Raises FileNotFoundError before the first commit."""
+    out = _sink(spark, index_dir, load(index_dir, index_dir), "out")
+    if out is None:
+        raise FileNotFoundError(f"no survivors committed in {index_dir} yet")
+    return out

@@ -22,30 +22,23 @@ the world per batch. This store fixes that:
   (e.g. 100 TB / 65536 buckets ≈ 1.6 GB), a small delta touches a small
   fraction of state.
 
-One manifest (``manifest.json`` beside ``data/``) is the table's only
-commit point: the table schema and each live bucket's files, as paths
-relative to the table (a copied table stays valid). Every write appends
-new bucket files, deleting nothing; commits the next manifest with one
-``os.replace``; then deletes the files in the buckets this commit or the
-previous one wrote that neither manifest lists. So a reader resolves one
-committed version, whose files outlive the next commit; a crash at any
-step leaves the old or the new version; and a retry never reads a file
-of the crashed attempt (new files are the written buckets' listing
-after the write minus the listing before it). That is the minimal form
-of the Delta/Iceberg log; on those formats this class collapses to
-``MERGE INTO`` with the same key clustering. One writer per table.
+The table commits through ``manifest.py``: one ``manifest.json``
+beside ``data/`` lists the table schema and each live bucket's files,
+and every merge or compaction adds the buckets' new files and swaps that
+manifest. So a reader resolves one committed version, whose files
+outlive the next commit, and a crash at any step leaves the old or the
+new version. On Delta/Iceberg this class collapses to ``MERGE INTO``
+with the same key clustering. One writer per table.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from olr_cdc_oracle_no_dbz_spark.catalog import write_atomic
 # unused here; kept as a module attribute because perfbench/cdc.py's
 # traced run wraps ``state.truncate_lineage``
 from olr_cdc_oracle_no_dbz_spark.checkpointing import truncate_lineage  # noqa: F401
@@ -54,20 +47,10 @@ from olr_cdc_oracle_no_dbz_spark.cdc.materialize import (
     merge_into_state,
     publish,
 )
+from olr_cdc_oracle_no_dbz_spark.manifest import MANIFEST, commit, load, observed, read
 from olr_cdc_oracle_no_dbz_spark.schema_catalog import evolve_struct
 
 _BUCKET = "bucket_id"
-
-
-def _observed(df: DataFrame, **aggs: Column) -> dict:
-    """Run ``df`` once, as a ``noop`` write, and return the aggregates
-    ``aggs`` observed over its rows: one job, which also fills ``df``'s
-    cache when ``df`` is persisted."""
-    obs = Observation()
-    df.observe(obs, *[agg.alias(name) for name, agg in aggs.items()]).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    return obs.get
 
 
 class ParquetStateTable:
@@ -91,7 +74,7 @@ class ParquetStateTable:
         self.spark = spark
         self.path = path
         self.data_dir = os.path.join(path, "data")
-        self.manifest_path = os.path.join(path, "manifest.json")
+        self.manifest_path = os.path.join(path, MANIFEST)
         self.key_cols = tuple(key_cols)
         self.order_cols = tuple(order_cols)
         self.n_buckets = n_buckets
@@ -102,19 +85,7 @@ class ParquetStateTable:
         """The committed version: ``schema`` (StructType JSON; None until
         the first write commits), ``files`` (paths relative to the table)
         and ``written`` (the bucket directories that commit wrote)."""
-        try:
-            with open(self.manifest_path) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            if os.path.isdir(self.data_dir) and any(
-                e.startswith(f"{_BUCKET}=") for e in os.listdir(self.data_dir)
-            ):
-                raise RuntimeError(
-                    f"state table {self.path} has bucket files but no "
-                    "manifest.json (written without a commit log); refusing "
-                    "to treat it as empty — rebuild it with bootstrap()"
-                ) from None
-            return {"schema": None, "files": [], "written": []}
+        return load(self.path, self.data_dir)
 
     def exists(self) -> bool:
         return self._manifest()["schema"] is not None
@@ -134,15 +105,6 @@ class ParquetStateTable:
     def _dirs(buckets) -> set[str]:
         return {os.path.join("data", f"{_BUCKET}={b}") for b in buckets}
 
-    def _listing(self, dirs) -> set[str]:
-        """Every file on disk in ``dirs``, listed by a manifest or not."""
-        return {
-            os.path.join(d, name)
-            for d in dirs
-            if os.path.isdir(os.path.join(self.path, d))
-            for name in os.listdir(os.path.join(self.path, d))
-        }
-
     def read_internal(self, buckets: list[int] | None = None) -> DataFrame | None:
         """Internal state (tombstones + (scn, seq) watermark retained) of
         the committed version; ``buckets`` limits the scan to their files."""
@@ -152,47 +114,22 @@ class ParquetStateTable:
     def _read(self, manifest: dict, dirs: set[str] | None) -> DataFrame | None:
         if manifest["schema"] is None:
             return None
-        files = manifest["files"]
-        if dirs is not None:
-            files = [f for f in files if os.path.dirname(f) in dirs]
         schema = T.StructType.fromJson(manifest["schema"])
-        reader = self.spark.read.schema(schema.add(_BUCKET, T.IntegerType()))
-        return reader.option("basePath", self.data_dir).parquet(
-            *[os.path.join(self.path, f) for f in files]
+        return read(
+            self.spark, self.path, manifest, schema.add(_BUCKET, T.IntegerType()),
+            "data", dirs,
         )
 
     def _commit(self, manifest: dict, rows: DataFrame, buckets) -> None:
         """Make ``rows`` (with ``bucket_id``) the whole content of
-        ``buckets``: append their files, swap the manifest, delete what
-        neither the new nor the previous manifest lists."""
-        if not os.path.exists(self.manifest_path):
-            # an empty manifest first, so that bucket files left by a crash
-            # before the first commit do not read as a manifest-less table
-            os.makedirs(self.path, exist_ok=True)
-            write_atomic(self.manifest_path, json.dumps(manifest))
-        written = self._dirs(buckets)
-        before = self._listing(written)
-        rows.write.mode("append").partitionBy(_BUCKET).parquet(self.data_dir)
-        new = {f for f in self._listing(written) - before if f.endswith(".parquet")}
-        if not new and manifest["schema"] is None:
-            return  # an empty first write creates no table
-        files = sorted(
-            new | {f for f in manifest["files"] if os.path.dirname(f) not in written}
-        )
+        ``buckets`` in one commit; the manifest schema widens by theirs."""
         old = T.StructType.fromJson(manifest["schema"] or T.StructType().jsonValue())
         schema = evolve_struct(old, rows.drop(_BUCKET).schema)  # all nullable
-        committed = {
-            "schema": schema.jsonValue(),
-            "files": files,
-            "written": sorted(written),
-        }
-        write_atomic(self.manifest_path, json.dumps(committed))
-        live = set(manifest["files"]) | set(files)
-        for f in self._listing(written | set(manifest["written"])):
-            # a checksum sidecar ".<file>.crc" lives and dies with <file>
-            d, name = os.path.split(f)
-            if os.path.join(d, name.lstrip(".").removesuffix(".crc")) not in live:
-                os.remove(os.path.join(self.path, f))
+        commit(
+            self.path, manifest,
+            lambda: rows.write.mode("append").partitionBy(_BUCKET).parquet(self.data_dir),
+            self._dirs(buckets), replace=True, schema=schema.jsonValue(),
+        )
 
     # -- merge ------------------------------------------------------------
 
@@ -218,7 +155,7 @@ class ParquetStateTable:
         manifest = self._manifest()
         state, buckets = None, range(self.n_buckets)
         if manifest["schema"] is not None:
-            seen = _observed(delta, buckets=F.collect_set(self._bucket_col()))
+            seen = observed(delta, buckets=F.collect_set(self._bucket_col()))
             buckets = sorted(seen["buckets"])
             if not buckets:
                 return
@@ -283,7 +220,7 @@ class ParquetStateTable:
         dead = F.col("__deleted").eqNullSafe(True) & F.coalesce(
             F.col(self.order_cols[0]) <= tombstone_watermark_scn, F.lit(False)
         )
-        seen = _observed(
+        seen = observed(
             state.filter(dead), buckets=F.collect_set(_BUCKET), n_dead=F.count("*")
         )
         touched = sorted(seen["buckets"])

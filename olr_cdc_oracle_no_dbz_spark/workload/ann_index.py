@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from olr_cdc_oracle_no_dbz_spark.catalog import write_atomic
+from olr_cdc_oracle_no_dbz_spark.manifest import write_atomic
 from olr_cdc_oracle_no_dbz_spark.workload import register
 from olr_cdc_oracle_no_dbz_spark.workload.ext_queries import (
     _ADC_COS,

@@ -6,11 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from olr_cdc_oracle_no_dbz_spark.scale import (
-    bucketed_table,
-    salted_join,
-    write_bucketed,
-)
+from olr_cdc_oracle_no_dbz_spark.scale import salted_join, write_bucketed
 
 
 def _plan(df) -> str:
@@ -80,8 +76,8 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed_table(spark, "bt.orders_b").join(
-            bucketed_table(spark, "bt.items_b"), "o_id"
+        joined = spark.table("bt.orders_b").join(
+            spark.table("bt.items_b"), "o_id"
         )
         plan = _plan(joined)
         assert "Exchange hashpartitioning" not in plan
@@ -90,7 +86,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         assert joined.count() == 3000
         # groupBy on the bucket key is exchange-free too
         agg_plan = _plan(
-            bucketed_table(spark, "bt.orders_b").groupBy("o_id").count()
+            spark.table("bt.orders_b").groupBy("o_id").count()
         )
         assert "Exchange hashpartitioning" not in agg_plan
     finally:
@@ -194,64 +190,6 @@ def test_partitioned_write_prunes_at_planning_time(spark, tmp_path):
     assert q.count() == 100
     # directory layout is the hive convention consumers expect
     assert (tmp_path / "part" / "day=3").exists()
-
-
-def test_compact_small_files_preserves_data(spark, tmp_path):
-    """compact_small_files: many tiny files collapse to few, bytes and
-    rows unchanged (checksummed before/after)."""
-    from olr_cdc_oracle_no_dbz_spark.scale import compact_small_files
-
-    path = str(tmp_path / "frag")
-    # 64 separate writes -> at least 64 files (a streaming sink's wake)
-    spark.range(2000).repartition(64).write.parquet(path)
-    import glob
-
-    before = len(glob.glob(path + "/**/*.parquet", recursive=True))
-    assert before >= 32
-    sum_before = spark.read.parquet(path).agg(F.sum("id")).collect()[0][0]
-    n_after = compact_small_files(spark, path, target_file_bytes=1 << 30)
-    assert n_after < before
-    assert (
-        spark.read.parquet(path).agg(F.sum("id")).collect()[0][0] == sum_before
-    )
-
-
-def test_compact_preserves_partitioned_layout(spark, tmp_path):
-    """ADVICE r4: compaction of a hive-partitioned table must keep the
-    ``col=value`` directory layout (and thus planning-time partition
-    pruning), not inline the partition column into the data files."""
-    from olr_cdc_oracle_no_dbz_spark.scale import (
-        compact_small_files,
-        write_partitioned,
-    )
-
-    df = spark.range(1000).select(
-        F.col("id"),
-        (F.col("id") % 4).alias("day"),
-    ).repartition(16)
-    path = str(tmp_path / "pfrag")
-    write_partitioned(df, path, ["day"])
-    import glob
-
-    before = len(glob.glob(path + "/**/*.parquet", recursive=True))
-    assert before >= 16
-    sum_before = spark.read.parquet(path).agg(F.sum("id")).collect()[0][0]
-    n_after = compact_small_files(spark, path)
-    assert n_after == 4  # one file per partition directory
-    for d in range(4):
-        assert (tmp_path / "pfrag" / f"day={d}").exists()
-    back = spark.read.parquet(path)
-    assert back.agg(F.sum("id")).collect()[0][0] == sum_before
-    plan = (
-        back.filter(F.col("day") == 2)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters: [" in plan  # pruning still planning-time
-    # no stale swap directories left behind
-    assert not (tmp_path / "pfrag.compact.tmp").exists()
-    assert not (tmp_path / "pfrag.compact.old").exists()
 
 
 def test_write_zorder_wide_domain_footers_tight(spark, tmp_path):
@@ -388,41 +326,3 @@ def test_band_join_rewrite_equals_theta_join_on_boundaries(spark):
     want = sorted(map(tuple, naive.collect()))
     assert got == want
     assert len(want) > 10  # the crafted input actually produces matches
-
-
-def test_read_parquet_retrying_absorbs_swap_window(spark, tmp_path):
-    """VERDICT r5 item 8: a reader landing inside compact_small_files'
-    rename swap must retry and succeed once the path reappears; a
-    genuinely missing path and a non-path error must still raise."""
-    from pyspark.errors import AnalysisException
-
-    from olr_cdc_oracle_no_dbz_spark.catalog import read_parquet_retrying
-
-    real = str(tmp_path / "t.parquet")
-    spark.range(5).write.parquet(real)
-
-    calls = {"n": 0}
-
-    def flaky_reader(path):
-        calls["n"] += 1
-        if calls["n"] <= 2:  # first two reads land in the swap window
-            raise AnalysisException(
-                f"[PATH_NOT_FOUND] Path does not exist: file:{path}"
-            )
-        return spark.read.parquet(path)
-
-    df = read_parquet_retrying(flaky_reader, real, attempts=5, delay_s=0.01)
-    assert df.count() == 5
-    assert calls["n"] == 3
-
-    with pytest.raises(AnalysisException):
-        read_parquet_retrying(
-            spark.read.parquet, str(tmp_path / "nope.parquet"),
-            attempts=2, delay_s=0.01,
-        )
-
-    def broken_reader(path):
-        raise AnalysisException("[UNRESOLVED_COLUMN] something else")
-
-    with pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
-        read_parquet_retrying(broken_reader, real, attempts=5, delay_s=0.01)

@@ -1,24 +1,37 @@
 """Incremental streaming near-dedup (streaming/dedup.py): cross-batch
 duplicate suppression via the persisted MinHash index, in-batch
-dedup, restart continuity, and retry idempotence."""
+dedup, restart continuity, retry idempotence, the one manifest commit
+both sinks share, and index compaction through that commit."""
 
 from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from test_stream_joins import _jobs
+
+from olr_cdc_oracle_no_dbz_spark.manifest import MANIFEST, load
+from olr_cdc_oracle_no_dbz_spark.streaming import dedup as D
 from olr_cdc_oracle_no_dbz_spark.streaming.dedup import (
     apply_batch,
+    compact_index,
     dedupe_batch,
     incremental_near_dedup,
+    read_survivors,
 )
 
 _BASE = (
     "the quick brown fox jumps over the lazy dog while seven wizards "
     "brew strong potions beneath the ancient oak tree near the river"
+)
+
+_DISTINCT = (
+    "completely different subject matter entirely unrelated words "
+    "about galaxies planets orbits telescopes and the speed of light"
 )
 
 
@@ -40,25 +53,51 @@ def _drain(spark, src, out, idx, ckpt):
     q.awaitTermination(120)
 
 
+def _survivors(spark, idx) -> list[int] | None:
+    """The committed survivor ids (sorted, duplicates kept), or None
+    before the first commit."""
+    try:
+        return sorted(r.doc_id for r in read_survivors(spark, idx).collect())
+    except FileNotFoundError:
+        return None
+
+
+def _index(spark, idx):
+    """The committed index rows."""
+    rows = D._sink(spark, idx, load(idx, idx), "index")
+    return [] if rows is None else rows.collect()
+
+
+def _parquet_files(out, idx) -> set[str]:
+    """Every parquet file on disk in both sinks, relative to ``idx``."""
+    return {
+        os.path.relpath(os.path.join(d, f), idx)
+        for root in (out, idx)
+        for d, _, names in os.walk(root)
+        for f in names
+        if f.endswith(".parquet")
+    }
+
+
+def _manifest_bytes(idx) -> bytes:
+    with open(os.path.join(idx, MANIFEST), "rb") as fh:
+        return fh.read()
+
+
 def test_cross_batch_and_in_batch_dedup(spark, tmp_path):
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
     idx = str(tmp_path / "idx")
     ckpt = str(tmp_path / "ckpt")
 
-    distinct = (
-        "completely different subject matter entirely unrelated words "
-        "about galaxies planets orbits telescopes and the speed of light"
-    )
     # batch 1: base doc + a distinct doc + an in-batch near-dup of base
     _write(src, "b1.json", [
         _doc(1, _BASE),
-        _doc(2, distinct),
+        _doc(2, _DISTINCT),
         _doc(3, _BASE + " extra"),
     ])
     _drain(spark, src, out, idx, ckpt)
-    kept1 = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert kept1 == {1, 2}  # 3 deduped against 1 within the batch
+    assert _survivors(spark, idx) == [1, 2]  # 3 deduped against 1 within the batch
 
     # batch 2 (restart): near-dup of doc 1 (cross-batch, via the index),
     # plus a genuinely new doc
@@ -71,33 +110,29 @@ def test_cross_batch_and_in_batch_dedup(spark, tmp_path):
         _doc(11, fresh),
     ])
     _drain(spark, src, out, idx, ckpt)
-    kept2 = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert kept2 == {1, 2, 11}  # 10 suppressed by the index
+    assert _survivors(spark, idx) == [1, 2, 11]  # 10 suppressed by the index
 
     # the index holds exactly the survivors' signatures
-    idx_ids = {r["doc_id"] for r in spark.read.parquet(idx).collect()}
-    assert idx_ids == {1, 2, 11}
+    assert {r["doc_id"] for r in _index(spark, idx)} == {1, 2, 11}
 
 
 def test_batch_marker_makes_apply_idempotent(spark, tmp_path):
+    """A foreachBatch retry of a committed batch: the manifest's batch id
+    makes ``apply_batch`` return before any job, and neither sink nor
+    the manifest changes."""
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
     idx = str(tmp_path / "idx")
     ckpt = str(tmp_path / "ckpt")
     _write(src, "b1.json", [_doc(1, _BASE)])
     _drain(spark, src, out, idx, ckpt)
-    n_before = spark.read.parquet(out).count()
-    # simulate a foreachBatch retry of batch 0: the marker short-circuits
-    from olr_cdc_oracle_no_dbz_spark.streaming import dedup as D
+    assert load(idx, idx)["batch_id"] == 0
+    before = _manifest_bytes(idx)
 
     batch = spark.createDataFrame([(1, _BASE)], "doc_id long, text string")
-    marker = os.path.join(idx, "_batch_0")
-    assert os.path.exists(marker)
-    # re-run the apply body the way a retry would
-    kept = D.dedupe_batch(spark, batch, idx)
-    # doc 1 now dups ITSELF in the index -> retry writes nothing new
-    assert kept.count() == 0
-    assert spark.read.parquet(out).count() == n_before
+    assert _jobs(spark, lambda: apply_batch(spark, batch, 0, out, idx)) == 0
+    assert _manifest_bytes(idx) == before
+    assert _survivors(spark, idx) == [1]
 
 
 def test_dedupe_batch_threshold_separates(spark, tmp_path):
@@ -117,51 +152,78 @@ def test_dedupe_batch_threshold_separates(spark, tmp_path):
     assert ids == {1, 3}
 
 
-@pytest.mark.parametrize(
-    "point",
-    [
-        "between_stage_writes",
-        "before_seal",
-        "before_publish",
-        "mid_publish_out",
-        "mid_publish_index",
-    ],
-)
-def test_crash_injection_no_duplicate_survivors(spark, tmp_path, point):
-    """VERDICT r5 item 4: kill apply_batch at every crash window — the
-    retry must produce EXACTLY the same out_dir/index contents as an
-    uninterrupted run, with no duplicated survivor rows."""
+def _crash(monkeypatch, step, out, idx):
+    """Make the next call of ``step`` fail: "out_write" / "index_write"
+    let the Spark write to that sink land and then fail (the job dies
+    before the commit); "write" does so for any write; "replace" fails
+    the manifest ``os.replace``; "gc" the first garbage-collecting
+    ``os.remove``."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    owner, name = {
+        "replace": (os, "replace"),
+        "gc": (os, "remove"),
+    }.get(step, (DataFrameWriter, "parquet"))
+    target = {"out_write": out, "index_write": idx}.get(step)
+    real = getattr(owner, name)
+
+    def crash(*args, **kwargs):
+        if owner is DataFrameWriter:
+            real(*args, **kwargs)
+            if target is not None and os.path.abspath(args[1]) != target:
+                return None
+        raise OSError(f"injected crash at {step}")
+
+    monkeypatch.setattr(owner, name, crash)
+
+
+@pytest.mark.parametrize("step", ["out_write", "index_write", "replace", "gc"])
+def test_crash_injection_no_duplicate_survivors(spark, tmp_path, monkeypatch, step):
+    """A crash at each write step of ``apply_batch`` (the survivor write,
+    the index write, the manifest ``os.replace``, the garbage
+    collection) leaves readers exactly the before- or the after-snapshot:
+    the survivors and what ``dedupe_batch`` accepts as corpus. The retry
+    converges to one copy of each survivor, a second retry leaves the
+    manifest byte-identical, and the next batch dedups against the
+    recovered index."""
     out = str(tmp_path / "out")
     idx = str(tmp_path / "idx")
+    apply_batch(spark, spark.createDataFrame([(2, _DISTINCT)], "doc_id long, text string"),
+                0, out, idx)
     batch = spark.createDataFrame(
         [(1, _BASE), (3, _BASE + " extra")], "doc_id long, text string"
     )
 
-    fired = {"n": 0}
+    def snapshot():
+        kept = sorted(r.doc_id for r in dedupe_batch(spark, batch, idx).collect())
+        return _survivors(spark, idx), kept
 
-    def fault(p):
-        if p == point and fired["n"] == 0:
-            fired["n"] = 1
-            raise RuntimeError(f"injected crash at {p}")
+    before, after = ([2], [1]), ([1, 2], [])
+    assert snapshot() == before
+    if step == "gc":
+        # an earlier attempt died after its survivor write, so the
+        # commit has that attempt's files to collect
+        with monkeypatch.context() as m:
+            _crash(m, "out_write", out, idx)
+            with pytest.raises(OSError, match="injected"):
+                apply_batch(spark, batch, 1, out, idx)
+    with monkeypatch.context() as m:
+        _crash(m, step, out, idx)
+        with pytest.raises(OSError, match="injected"):
+            apply_batch(spark, batch, 1, out, idx)
+    assert snapshot() in (before, after)
 
-    with pytest.raises(RuntimeError, match="injected crash"):
-        apply_batch(spark, batch, 0, out, idx, _fault=fault)
-    assert fired["n"] == 1, f"fault point {point} never reached"
-    # foreachBatch retry: same batch, same batch_id, no fault
-    apply_batch(spark, batch, 0, out, idx)
-
-    rows = spark.read.parquet(out).collect()
-    assert sorted(r["doc_id"] for r in rows) == [1]  # 3 in-batch-deduped, once
-    idx_rows = spark.read.parquet(idx).collect()
-    assert sorted({r["doc_id"] for r in idx_rows}) == [1]
+    apply_batch(spark, batch, 1, out, idx)  # the foreachBatch retry
+    assert _survivors(spark, idx) == [1, 2]  # 3 in-batch-deduped, 1 once
+    idx_rows = _index(spark, idx)
     # one index row per (doc, band), partitioned by band-hash bucket
-    assert len(idx_rows) == 4 and all(r["bucket"] is not None for r in idx_rows)
-    assert os.path.exists(os.path.join(idx, "_batch_0"))
-    assert not os.path.exists(os.path.join(idx, "_stage_0"))
+    assert sorted(r.doc_id for r in idx_rows) == [1] * 4 + [2] * 4
+    assert all(r.bucket is not None for r in idx_rows)
 
     # a second retry after commit is a pure no-op
-    apply_batch(spark, batch, 0, out, idx)
-    assert spark.read.parquet(out).count() == 1
+    committed = _manifest_bytes(idx)
+    apply_batch(spark, batch, 1, out, idx)
+    assert _manifest_bytes(idx) == committed
 
     # and the NEXT batch still dedups against the recovered index
     b2 = spark.createDataFrame(
@@ -169,11 +231,132 @@ def test_crash_injection_no_duplicate_survivors(spark, tmp_path, point):
                                      "sails anchors harbors and tides")],
         "doc_id long, text string",
     )
-    apply_batch(spark, b2, 1, out, idx)
-    rows2 = sorted(
-        r["doc_id"] for r in spark.read.parquet(out).collect()
+    apply_batch(spark, b2, 2, out, idx)
+    assert _survivors(spark, idx) == [1, 2, 11]
+    # whose commit collected every file of the crashed attempts
+    assert _parquet_files(out, idx) == set(load(idx, idx)["files"])
+
+
+def _words(i: int) -> str:
+    return " ".join(f"w{i}x{j}" for j in range(30))
+
+
+def _fragmented_index(spark, out, idx, n_batches=3):
+    """An index built by ``n_batches`` batches of six distinct documents:
+    with few buckets, each batch adds a file to buckets earlier batches
+    wrote too."""
+    for b in range(n_batches):
+        docs = [(10 * b + i, _words(10 * b + i)) for i in range(6)]
+        apply_batch(spark, spark.createDataFrame(docs, "doc_id long, text string"),
+                    b, out, idx)
+
+
+def _bucket_files(idx):
+    return Counter(
+        os.path.dirname(f) for f in load(idx, idx)["files"] if f.startswith("bucket=")
     )
-    assert rows2 == [1, 11]
+
+
+def test_compact_index_one_file_per_bucket_rows_and_pruning_unchanged(
+    spark, tmp_path, monkeypatch
+):
+    """``compact_index`` replaces every bucket that holds several files
+    by one file in one commit: the index rows and the survivors are
+    unchanged, the file count falls, and a filter on ``bucket`` is still
+    a planning-time ``PartitionFilters`` prune. A second call has nothing
+    left to do."""
+    # few buckets, so that batches land in the same ones
+    monkeypatch.setattr(D, "N_IDX_BUCKETS", 4)
+    out = str(tmp_path / "out")
+    idx = str(tmp_path / "idx")
+    _fragmented_index(spark, out, idx)
+    rows = sorted(map(tuple, _index(spark, idx)))
+    survivors = _survivors(spark, idx)
+    files = _bucket_files(idx)
+    multi = sorted(d for d, n in files.items() if n > 1)
+    assert multi
+
+    assert compact_index(spark, idx) == len(multi)
+    assert sorted(map(tuple, _index(spark, idx))) == rows
+    assert _survivors(spark, idx) == survivors
+    compacted = _bucket_files(idx)
+    assert set(compacted) == set(files)
+    assert all(n == 1 for n in compacted.values())
+    assert sum(compacted.values()) < sum(files.values())
+
+    scan = D._sink(spark, idx, load(idx, idx), "index").filter(F.col("bucket") == 2)
+    plan = scan._jdf.queryExecution().executedPlan().toString()
+    assert "bucket" in plan.split("PartitionFilters: [")[1].split("]")[0]
+    assert {r.bucket for r in scan.collect()} == {2}
+
+    before = _manifest_bytes(idx)
+    assert compact_index(spark, idx) == 0
+    assert _manifest_bytes(idx) == before
+    # the next batch's commit collects the replaced files
+    apply_batch(spark, spark.createDataFrame([(99, _words(99))], "doc_id long, text string"),
+                3, out, idx)
+    assert _parquet_files(out, idx) == set(load(idx, idx)["files"])
+
+
+@pytest.mark.parametrize("step", ["write", "replace", "gc"])
+def test_compact_index_crash_leaves_a_snapshot_and_retry_converges(
+    spark, tmp_path, monkeypatch, step
+):
+    """A crash at each step of ``compact_index`` (the Spark write, the
+    manifest ``os.replace``, the garbage collection) leaves the
+    committed rows as they were, never doubled by the crashed attempt's
+    files; a retry converges to one file per bucket."""
+    monkeypatch.setattr(D, "N_IDX_BUCKETS", 4)
+    out = str(tmp_path / "out")
+    idx = str(tmp_path / "idx")
+    _fragmented_index(spark, out, idx)
+    rows = sorted(map(tuple, _index(spark, idx)))
+    if step == "gc":
+        # an earlier compaction died after its write, so the commit has
+        # that attempt's files to collect
+        with monkeypatch.context() as m:
+            _crash(m, "write", out, idx)
+            with pytest.raises(OSError, match="injected"):
+                compact_index(spark, idx)
+    with monkeypatch.context() as m:
+        _crash(m, step, out, idx)
+        with pytest.raises(OSError, match="injected"):
+            compact_index(spark, idx)
+    assert sorted(map(tuple, _index(spark, idx))) == rows
+
+    compact_index(spark, idx)
+    assert sorted(map(tuple, _index(spark, idx))) == rows
+    assert all(n == 1 for n in _bucket_files(idx).values())
+    assert compact_index(spark, idx) == 0
+
+
+def test_index_read_construction_runs_no_job(spark, tmp_path):
+    """Building the index read (and the survivor read) resolves the
+    sinks through their manifest, which carries the schemas: no
+    partition-discovery or schema-inference job."""
+    out = str(tmp_path / "out")
+    idx = str(tmp_path / "idx")
+    _fragmented_index(spark, out, idx, n_batches=2)
+    manifest = load(idx, idx)
+    assert _jobs(spark, lambda: D._sink(spark, idx, manifest, "index", [0, 1, 2])) == 0
+    assert _jobs(spark, lambda: read_survivors(spark, idx)) == 0
+
+
+def test_apply_batch_on_existing_index_runs_pinned_jobs(spark, tmp_path):
+    """A batch applied to an existing index runs the observed
+    touched-bucket pass, the survivors' materialization, the emptiness
+    probe and the two sink writes (one job per adaptive query stage of
+    each), and no job to list or infer the index: 17 jobs on a fresh
+    session, 16 when the whole suite has run before it in the session."""
+    out = str(tmp_path / "out")
+    idx = str(tmp_path / "idx")
+    _fragmented_index(spark, out, idx, n_batches=2)
+    docs = [(100 + i, _words(100 + i)) for i in range(6)]
+    batch = spark.createDataFrame(docs, "doc_id long, text string")
+    assert _jobs(spark, lambda: apply_batch(spark, batch, 2, out, idx)) <= 17
+    assert _survivors(spark, idx) == sorted(
+        [10 * b + i for b in range(2) for i in range(6)] + [100 + i for i in range(6)]
+    )
 
 
 def test_full_bucket_touch_degrades_to_full_index_scan(
@@ -186,8 +369,6 @@ def test_full_bucket_touch_degrades_to_full_index_scan(
     filter passes everything) with no driver blow-up and unchanged
     answers. Pinned with N_IDX_BUCKETS shrunk to 3 so a small batch
     provably saturates all buckets."""
-    from olr_cdc_oracle_no_dbz_spark.streaming import dedup as D
-
     monkeypatch.setattr(D, "N_IDX_BUCKETS", 3)
 
     def mk(i, seed):
