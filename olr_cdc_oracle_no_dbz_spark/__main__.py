@@ -255,10 +255,6 @@ def cmd_pipeline(args) -> int:
         schemas=schemas or None,
     )
     query.awaitTermination()
-    if not isinstance(states, dict):
-        # mirror run_pipeline's fallback chain exactly, or the printed
-        # sink name can disagree with the state-dir name (ADVICE r6)
-        states = {cfg.sink_table or (cfg.topic or cfg.table.lower()): states}
     for sink, st in states.items():
         n = st.current(cfg.delete_mode).count() if st.exists() else 0
         print(f"{sink}: {n} current-state rows under {st.path}")

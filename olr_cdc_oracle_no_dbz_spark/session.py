@@ -60,11 +60,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback 32)
-    so tests and bench share one code path.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback:
+    the cores this process may run on) so tests and bench share one code
+    path.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get(
+            "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+        )
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)

@@ -1,7 +1,9 @@
 """Streaming change-feed sources and sinks (SURVEY.md §2.1 S1/S3/S4, §2.2 K1).
 
-The file source simulates OpenLogReplicator's continuous emission (one
-JSON-lines file per transaction dropped into a watched directory —
+The file source (the text ``readStream`` that
+``streaming.pipeline.materialize_stream`` decodes per route) simulates
+OpenLogReplicator's continuous emission (one JSON-lines file per
+transaction dropped into a watched directory —
 BASELINE "Structured Streaming CDC ingestion"; OLR checkpoint analog
 docker-compose-olr.yml:56). The Kafka wrappers mirror the reference's
 producer/consumer endpoints (scripts/OpenLogReplicator.json:46-52,
@@ -17,26 +19,6 @@ from pyspark.sql import types as T
 
 from olr_cdc_oracle_no_dbz_spark.cdc.decode import decode_events
 from olr_cdc_oracle_no_dbz_spark.schemas import CHANGE_EVENT_SCHEMA
-
-
-def read_change_stream(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType = CHANGE_EVENT_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-stream change-feed source (S1/S4): watch ``path`` for
-    JSON-lines files, decode each line into the typed envelope.
-
-    ``max_files_per_trigger`` is the backpressure bound (ST4) — the
-    Spark analog of OLR's transaction-buffer cap
-    (scripts/OpenLogReplicator.json:28-31: memory min/max-mb).
-    Corrupt lines survive in ``_corrupt`` instead of failing the stream.
-    """
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return decode_events(reader.load(path), schema)
 
 
 def infer_evolved_schema(

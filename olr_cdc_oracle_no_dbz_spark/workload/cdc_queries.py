@@ -371,7 +371,7 @@ def routing_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     are OLR_DB.USERS changes, odd are OLR_DB.ORDERS, each with its own
     image schema. Factored out of the batch gate so the streaming soak
     (tests/test_streaming_equivalence.py) can stage the SAME topic as
-    files and drain it through materialize_stream_tables."""
+    files and drain it through materialize_stream, one route per table."""
     ev = t(spark, sf_dir, "events")
     op = (
         F.when(F.col("event_type") == "signup", "c")
@@ -448,7 +448,8 @@ def cdc_multi_table_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     (scripts/OpenLogReplicator.json:32-39 ``filter.table: [...]``),
     source-filtered, unwrapped, and LWW-materialized into its own
     state — the exact per-route flow of
-    ``streaming.pipeline.materialize_stream_tables``. The output unions
+    ``streaming.pipeline.materialize_stream`` given one route per table.
+    The output unions
     both sink tables with their origin name, Connect's
     ``table.name.format: ${topic}`` fan-out (README.md:791)."""
     raw = routing_changelog(spark, sf_dir)

@@ -92,7 +92,10 @@ def mirror(spark, path) -> str:
 
     src, db_path = os.path.join(path, "src"), os.path.join(path, "mirror.db")
     rows = [product_row(i, f"p{i}", stock=i) for i in range(40)]
-    write_tx_file(src, "tx1.json", [event(100, "c", after=r, seq=r["id"]) for r in rows])
+    tx1 = write_tx_file(src, "tx1.json", [event(100, "c", after=r, seq=r["id"]) for r in rows])
+    # the file source orders by modification time; the two files often
+    # share a millisecond, so date tx1 back to make it the first batch
+    os.utime(tx1, (os.stat(tx1).st_atime, os.stat(tx1).st_mtime - 1))
     write_tx_file(src, "tx2.json", [
         event(200, "u", before=r, after=dict(r, stock=7), seq=r["id"]) for r in rows[:12]
     ])

@@ -116,8 +116,9 @@ def test_config_driven_pipeline_end_to_end(spark, tmp_path):
         src, "tx5.json", [event(400, "c", after=product_row(9, "Drop"), owner="X")]
     )
 
-    query, state = run_pipeline(spark, cfg, src, str(tmp_path / "work"))
+    query, states = run_pipeline(spark, cfg, src, str(tmp_path / "work"))
     query.awaitTermination(120)
+    state = states["products"]
 
     rows = {r["id"]: r.asDict() for r in state.current(cfg.delete_mode).collect()}
     assert set(rows) == {1, 2}  # rewrite mode keeps the tombstone
@@ -187,8 +188,9 @@ def test_capture_config_multi_table_mapping():
 
 def test_multi_table_pipeline_end_to_end(spark, tmp_path):
     """Two tables' interleaved insert/update/delete events, ONE
-    materialize_stream pass, each materialized into its own
-    independently-schema'd state table; restart continuity included."""
+    materialize_stream query with one route per table, each table
+    materialized into its own independently-schema'd state table;
+    restart continuity included."""
     from pyspark.sql import types as T
 
     from olr_cdc_oracle_no_dbz_spark.schemas import change_event_schema

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from olr_cdc_oracle_no_dbz_spark.cdc.intervals import decode_dts, decode_ytm
-from olr_cdc_oracle_no_dbz_spark.streaming.pipeline import sink_table_name
+from olr_cdc_oracle_no_dbz_spark.config import sink_table_name
 from olr_cdc_oracle_no_dbz_spark.streaming.source import read_spooldir_stream
 from olr_cdc_oracle_no_dbz_spark.streaming.stateful import running_profile
 from tests.conftest import write_tx_file

@@ -245,6 +245,49 @@ def test_materialize_stream_mirror_ignores_stale_redelivery(spark, tmp_path):
     assert _stock(state, db_path) == ([(1, 77)], [(1, 77)])
 
 
+def test_materialize_stream_two_routes_each_mirror_its_table(spark, tmp_path):
+    """Two routes in one query, each with its own state table and its
+    own SQLite mirror: every batch's rows of a table reach only that
+    table's mirror, and a stale redelivery of one table loses its merge
+    guard there, so each mirror equals its route's ``current()``."""
+    from olr_cdc_oracle_no_dbz_spark.schemas import CHANGE_EVENT_SCHEMA
+    from olr_cdc_oracle_no_dbz_spark.streaming import (
+        ParquetStateTable,
+        Route,
+        materialize_stream,
+    )
+    from tests.conftest import event, product_row
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    routes, dbs = [], []
+    for table in ("PRODUCT", "CUSTOMER"):
+        db_path = str(tmp_path / f"{table}.db")
+        _mirror_db(db_path)
+        state = ParquetStateTable(spark, str(tmp_path / table), n_buckets=4)
+        sink = {"connection_factory": _sqlite_factory(db_path), "table": "products"}
+        routes.append(
+            Route("OLR_DB", table, state, CHANGE_EVENT_SCHEMA, jdbc_sink=sink)
+        )
+        dbs.append(db_path)
+    r1, c5 = product_row(1, "Widget", stock=10), product_row(5, "Ann", stock=1)
+    create = [event(100, "c", after=r1)]
+    write_tx_file(src, "tx1.json", create + [
+        event(110, "c", after=c5, table="CUSTOMER"),
+        event(120, "c", after=product_row(6, "Bob", stock=2), table="CUSTOMER"),
+    ])
+    write_tx_file(src, "tx2.json", [
+        event(200, "u", before=r1, after=dict(r1, stock=77)),
+        event(210, "u", before=c5, after=dict(c5, stock=55), table="CUSTOMER"),
+    ])
+    materialize_stream(spark, src, routes, ckpt).awaitTermination(120)
+    want = [([(1, 77)], [(1, 77)]), ([(5, 55), (6, 2)], [(5, 55), (6, 2)])]
+    assert [_stock(r.state, db) for r, db in zip(routes, dbs)] == want
+
+    write_tx_file(src, "tx3.json", create)  # the scn-100 PRODUCT create again
+    materialize_stream(spark, src, routes, ckpt).awaitTermination(120)
+    assert [_stock(r.state, db) for r, db in zip(routes, dbs)] == want
+
+
 def test_materialize_stream_mirror_crash_after_state_commit(spark, tmp_path):
     """The mirror's connection fails once after a batch's state commit,
     which fails the query. A restart on the same checkpoint re-runs the

@@ -12,8 +12,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from olr_cdc_oracle_no_dbz_spark.schemas import CHANGE_EVENT_SCHEMA
 from olr_cdc_oracle_no_dbz_spark.streaming import (
     ParquetStateTable,
+    Route,
     materialize_stream,
     progress_summary,
     tumbling_agg,
@@ -170,14 +172,19 @@ def test_backpressure_max_files_per_trigger(spark, tmp_path):
     assert summary["batch_id"] is not None and summary["batch_id"] >= 2
 
 
-@pytest.mark.parametrize("mirror", [False, True], ids=["state", "state+jdbc"])
-def test_progress_counts_each_input_line_once(spark, tmp_path, mirror):
+@pytest.mark.parametrize(
+    "mirror, two_routes",
+    [(False, False), (True, False), (False, True)],
+    ids=["state", "state+jdbc", "two_routes"],
+)
+def test_progress_counts_each_input_line_once(spark, tmp_path, mirror, two_routes):
     """ST7 progress is truthful: the micro-batch is decoded once, so the
     summed ``numInputRows`` equals the lines fed — markers, a foreign
     table's event and a corrupt line included — with or without the
-    JDBC mirror. Re-reading the source per action (emptiness check,
-    touched buckets, merge, mirror collect) would count each line
-    once per pass."""
+    JDBC mirror, and with a second route that materializes that foreign
+    CUSTOMER table. Re-reading the source per action (emptiness check,
+    touched buckets, merge, mirror collect) or per route would count
+    each line once per pass."""
     import decimal
     import sqlite3
 
@@ -215,16 +222,42 @@ def test_progress_counts_each_input_line_once(spark, tmp_path, mirror):
             return sqlite3.connect(db_path, timeout=60)
 
         kw["jdbc_sink"] = {"connection_factory": factory, "table": "products"}
-    q = _run(spark, src, state, ckpt, max_files_per_trigger=2, **kw)
+    routes = state
+    if two_routes:
+        customers = ParquetStateTable(
+            spark, str(tmp_path / "customers"), n_buckets=4
+        )
+        routes = [
+            Route("OLR_DB", "PRODUCT", state, CHANGE_EVENT_SCHEMA),
+            Route("OLR_DB", "CUSTOMER", customers, CHANGE_EVENT_SCHEMA),
+        ]
+    q = _run(spark, src, routes, ckpt, max_files_per_trigger=2, **kw)
     assert sum(p["numInputRows"] for p in q.recentProgress) == sum(
         len(lines) for lines in files
     )
     assert _rows(state.current())[1]["stock"] == 7
+    if two_routes:
+        assert set(_rows(state.current())) == {1}
+        assert {k: r["name"] for k, r in _rows(customers.current()).items()} == {
+            9: "X"
+        }
     if mirror:
         with sqlite3.connect(db_path) as db:
             assert db.execute("SELECT id, stock FROM products").fetchall() == [
                 (1, 7)
             ]
+
+
+def test_route_list_refuses_one_route_keywords(spark, tmp_path):
+    """The owner/table/schema/subject/jdbc_sink keywords build the
+    one-route shorthand; with a route list they would be silently
+    ignored, so they raise before any query starts."""
+    state = ParquetStateTable(spark, str(tmp_path / "state"), n_buckets=4)
+    routes = [Route("OLR_DB", "PRODUCT", state, CHANGE_EVENT_SCHEMA)]
+    for kw in ({"table": "CUSTOMER"}, {"jdbc_sink": {}}, {"subject": "p"}):
+        with pytest.raises(ValueError, match="Route"):
+            materialize_stream(spark, str(tmp_path), routes, str(tmp_path), **kw)
+    assert spark.streams.active == []
 
 
 def test_schema_evolution_new_column(spark, tmp_path):

@@ -192,7 +192,8 @@ def test_multi_table_routing_streaming_matches_batch_gate_sf01(spark, tmp_path):
     from olr_cdc_oracle_no_dbz_spark.schemas import change_event_schema
     from olr_cdc_oracle_no_dbz_spark.streaming import ParquetStateTable
     from olr_cdc_oracle_no_dbz_spark.streaming.pipeline import (
-        materialize_stream_tables,
+        Route,
+        materialize_stream,
     )
     from olr_cdc_oracle_no_dbz_spark.workload.cdc_queries import (
         routing_changelog,
@@ -219,15 +220,15 @@ def test_multi_table_routing_streaming_matches_batch_gate_sf01(spark, tmp_path):
         ),
     }
     routes = [
-        ("OLR_DB", "USERS", states["users"], change_event_schema(users_schema)),
-        ("OLR_DB", "ORDERS", states["orders"], change_event_schema(orders_schema)),
+        Route("OLR_DB", "USERS", states["users"], change_event_schema(users_schema)),
+        Route("OLR_DB", "ORDERS", states["orders"], change_event_schema(orders_schema)),
     ]
 
-    q = materialize_stream_tables(spark, src, routes, ckpt)
+    q = materialize_stream(spark, src, routes, ckpt)
     q.awaitTermination(300)
 
     raw.filter(F.crc32(F.col("value")) % 2 == 1).write.mode("append").text(src)
-    q = materialize_stream_tables(spark, src, routes, ckpt)
+    q = materialize_stream(spark, src, routes, ckpt)
     q.awaitTermination(300)
     # each sink table has exactly its row image's columns (no ``op``)
     assert states["users"].current().columns == users_schema.fieldNames()
